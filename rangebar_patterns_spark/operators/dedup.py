@@ -29,7 +29,9 @@ DuckDB); list folds are sequential in both engines, so results are exact.
 from __future__ import annotations
 
 import os
+import warnings
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -133,7 +135,13 @@ def spread_narrow_scan(docs: DataFrame, key: str = "doc_id") -> DataFrame:
         est_bytes = int(
             docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-    except Exception:  # Connect or stats-less plans: keep the r12 behavior
+    except (AttributeError, Py4JError) as exc:  # Connect or stats-less plans
+        warnings.warn(
+            f"spread_narrow_scan: no plan statistics ({type(exc).__name__}); "
+            f"spreading to the session width {n}",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         est_bytes = n * SPREAD_BYTES_PER_TASK
     width = max(1, min(n, -(-est_bytes // SPREAD_BYTES_PER_TASK)))
     if docs.rdd.getNumPartitions() >= width:

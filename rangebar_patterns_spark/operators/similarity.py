@@ -524,7 +524,7 @@ def pq_codes(
     (iters+1)-th pass.  Reuse would silently encode with stale
     centroids and change every downstream hash.  The real repeat-build
     waste — retraining the book per build — is closed by the catalog's
-    session cache instead (_PQ_BOOK_CACHE)."""
+    session side cache instead (catalog._pq_book)."""
     cdf = emb.sparkSession.createDataFrame(book, "m int, code int, cv array<double>")
     return (
         _pq_assign(_subvectors(emb, m), cdf)
@@ -586,7 +586,7 @@ def ivf_pq_search(
     plus one broadcast codebook.
 
     ``book`` injects an already-trained codebook (the catalog shares one
-    per (session, sf_dir) — the _KMEANS_CENTS_CACHE pattern), so repeat
+    per (session, sf_dir) — the catalog._kmeans_cents_n pattern), so repeat
     builds skip the Lloyd's training entirely; training in production is
     a one-time index-build step, never part of serving.
 

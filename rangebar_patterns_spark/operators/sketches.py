@@ -286,12 +286,6 @@ def _drop_hs_last() -> None:
             pass
 
 
-def release_distinct_cache() -> None:
-    """Unpersist the last distinct_sketch_panel hash relation (no-op if
-    none is held) — for callers outside the catalog's clearCache flow."""
-    _drop_hs_last()
-
-
 def distinct_sketch_panel(docs: DataFrame) -> DataFrame:
     """The certified panel: one row per (source, item) plus the merged
     ``__all__`` rows per item.  Per-source rows sketch that source's
@@ -319,9 +313,9 @@ def distinct_sketch_panel(docs: DataFrame) -> DataFrame:
     # n_items and exact_distinct now fall out of this one relation.
     # Swap-handle discipline (round-11 ADVICE): each call unpersists the
     # PREVIOUS call's relation, so repeated library/test invocations hold
-    # at most one cached copy instead of accumulating until clearCache;
-    # release_distinct_cache() drops the last one explicitly (recompute
-    # stays correct either way — unpersist only forfeits the cache).
+    # at most one cached copy instead of accumulating until clearCache
+    # (recompute stays correct either way — unpersist only forfeits the
+    # cache).
     hs = (
         items.select("source", "item", hexint(F.col("v")).alias("h"))
         .groupBy("source", "item", "h")

@@ -299,8 +299,8 @@ def with_signalset_quantiles(
     # is q-independent by the dedup-key property above, so all of a run's
     # q's come from ONE pass of sorted-window maintenance
     # (excl_quantile_stream_multi), each extra q costing only its O(1)
-    # pick — guarded by an exact rn/length equality check that falls back
-    # to the per-subrun stream if the invariant ever failed.
+    # pick — guarded by an exact rn/length/value equality check that falls
+    # back to the per-subrun stream if the invariant ever failed.
     def compute(pdf):
         pdf = pdf.sort_values(
             ["formation", "feature", "partner", "symbol", "q", "rn"],
@@ -336,8 +336,12 @@ def with_signalset_quantiles(
                 shared_qs = []
                 shared_spans = []
                 for a, b in zip(qb[:-1], qb[1:]):
-                    if (b - a) == first_len and np.array_equal(
-                        rn[s + a : s + b], first_rn
+                    if (
+                        (b - a) == first_len
+                        and np.array_equal(rn[s + a : s + b], first_rn)
+                        and np.array_equal(
+                            vals[s + a : s + b], series, equal_nan=True
+                        )
                     ):
                         shared_qs.append(float(qrun[a]))
                         shared_spans.append((a, b))

@@ -8,6 +8,7 @@ Registration is declarative so ``__spark_entry__.queries()`` /
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,45 +55,44 @@ def _cnt(cond) -> F.Column:
     return F.sum(F.when(cond, 1).otherwise(0))
 
 
-#: ~every catalog query starts from the bars adapter; persist it once per
-#: (session, sf_dir) so the events scan + synthetic-feature stack isn't
-#: re-executed per query (at cluster scale this is "read the bar table
-#: once per job", the same idea as the reference's TSV side-cache S12)
-_BARS_CACHE: dict[tuple[int, str], DataFrame] = {}
+#: every shared relation and trained artifact the catalog builds once per
+#: (session, sf_dir) — the bars, feature stack, eval layers, trades,
+#: shingle arrays, centroids, BPE merges, PQ book — lives in this one
+#: registry (the same idea as the reference's TSV side-cache S12).  Keys
+#: hold the session object itself, never its numeric id: a stopped
+#: session's recycled id must not alias a dead session's DataFrame.
+_SIDE_CACHE: dict[tuple, object] = {}
+
+
+def _side_cached(f):
+    """Memoize the builder ``f(spark, sf_dir, *args)`` in ``_SIDE_CACHE``
+    under ``(f.__name__, spark, sf_dir, *args)``."""
+
+    @functools.wraps(f)
+    def cached(spark, sf_dir, *args):
+        key = (f.__name__, spark, sf_dir, *args)
+        if key not in _SIDE_CACHE:
+            _SIDE_CACHE[key] = f(spark, sf_dir, *args)
+        return _SIDE_CACHE[key]
+
+    return cached
 
 
 def reset_plan_caches(spark: SparkSession) -> None:
-    """Drop every module-level per-(session, sf_dir) shared relation and
-    clear Spark's cache.  bench.py calls this between repeat passes so
-    each pass pays the full cold-cache cost (otherwise pass 2+ would
-    measure warm side-caches, not the workload)."""
-    for cache in (
-        _BARS_CACHE,
-        _FEATG_CACHE,
-        _CANDQ_CACHE,
-        _FULLGRID_CANDQ_CACHE,
-        _TRADES_CACHE,
-        _EVAL_CACHE,
-        _ARRS_CACHE,
-        _MH_PAIRS_CACHE,
-        _LOGREG_RAW_CACHE,
-        _KMEANS_CENTS_CACHE,
-        _BPE_MERGES_CACHE,
-        _PQ_BOOK_CACHE,
-        _NSYM_CACHE,
-    ):
-        cache.clear()
-    from ..operators.sketches import release_distinct_cache
-
-    release_distinct_cache()
+    """Drop every side cache and clear Spark's cache — the one release
+    path.  bench.py calls this between repeat passes so each pass pays the
+    full cold-cache cost (otherwise pass 2+ would measure warm side-caches,
+    not the workload)."""
+    _SIDE_CACHE.clear()
     spark.catalog.clearCache()
 
 
+@_side_cached
 def _bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _BARS_CACHE:
-        _BARS_CACHE[key] = bars_from_events(spark, sf_dir).persist()
-    return _BARS_CACHE[key]
+    """~every catalog query starts from the bars adapter; persisted so the
+    events scan + synthetic-feature stack isn't re-executed per query (at
+    cluster scale this is "read the bar table once per job")."""
+    return bars_from_events(spark, sf_dir).persist()
 
 
 # ---------------------------------------------------------------------------
@@ -216,18 +216,13 @@ def q_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
 GEN600_ROLLING = 999
 
 
-_FEATG_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@_side_cached
 def _featg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bar features with ROLLING ti threshold + the 5 non-ti gate
     thresholds — the shared input of every all-formation query.  Persisted:
     the gate-quantile Arrow pass is the expensive step."""
-    key = (id(spark), sf_dir)
-    if key not in _FEATG_CACHE:
-        feat = with_bar_features(_bars(spark, sf_dir), rolling_window=GEN600_ROLLING)
-        _FEATG_CACHE[key] = with_gate_quantiles(feat).persist()
-    return _FEATG_CACHE[key]
+    feat = with_bar_features(_bars(spark, sf_dir), rolling_window=GEN600_ROLLING)
+    return with_gate_quantiles(feat).persist()
 
 
 def _featg_ctes() -> str:
@@ -653,24 +648,19 @@ SWEEP_FEATURES = ["ofi", "price_impact", "turnover_imbalance", "aggression_ratio
 SWEEP_ROLLING = 999
 
 
-_CANDQ_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@_side_cached
 def _sweep_candq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _CANDQ_CACHE:
-        # _featg = bar features (rolling ti) + the 5 non-ti gate
-        # thresholds — the exhaustion/high-volume/VWAP formations in the
-        # 22-template sweep read them; shared+persisted with
-        # formation_counts and the short-barrier entries.  Routed via
-        # sweep_candidates_auto: since the pair-grain rewrite the fused
-        # path wins at every width, so only same-feature grids fall back
-        # to the layered shape (both produce identical rows, pinned in
-        # tests/test_sweep.py)
-        _CANDQ_CACHE[key] = sweep_candidates_auto(
-            _featg(spark, sf_dir), spark, default_sweep_grid(), SWEEP_FEATURES, WARMUP
-        ).persist()
-    return _CANDQ_CACHE[key]
+    # _featg = bar features (rolling ti) + the 5 non-ti gate
+    # thresholds — the exhaustion/high-volume/VWAP formations in the
+    # 22-template sweep read them; shared+persisted with
+    # formation_counts and the short-barrier entries.  Routed via
+    # sweep_candidates_auto: since the pair-grain rewrite the fused
+    # path wins at every width, so only same-feature grids fall back
+    # to the layered shape (both produce identical rows, pinned in
+    # tests/test_sweep.py)
+    return sweep_candidates_auto(
+        _featg(spark, sf_dir), spark, default_sweep_grid(), SWEEP_FEATURES, WARMUP
+    ).persist()
 
 
 def _materialize(sql: str, *ctes: str) -> str:
@@ -771,32 +761,27 @@ GEN600_FULL_BAR_FEATURES = ("ofi", "aggression_ratio")
 #: feature universe of the full-width grid (bar feature + 38 cross)
 _FULLGRID_FEATURES = sorted({*GEN600_FULL_BAR_FEATURES, *CROSS_FEATURES})
 
-#: the full-width candq feeds the gate funnel entry and the bench panel —
-#: persist the threshold relation once per (session, sf_dir) via the
-#: operator's own materialize path, and share the DataFrame here
-_FULLGRID_CANDQ_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@_side_cached
 def _fullgrid_candq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _FULLGRID_CANDQ_CACHE:
-        # NOT persisted at config grain: 30M-row materialization costs
-        # more than recomputing the (threshold-relation-persisted)
-        # explode + broadcast decode for the funnel and signal
-        # consumers.  The threshold
-        # shuffle's exact partition count is derived from estimated
-        # side-relation rows (sweep.derive_threshold_partitions) — the
-        # same sizing at any SF, no host-tuned constants.
-        _FULLGRID_CANDQ_CACHE[key] = sweep_candidates_with_thresholds(
-            with_cross_features(_featg(spark, sf_dir)),
-            spark,
-            gen600_full_grid(GEN600_FULL_BAR_FEATURES),
-            _FULLGRID_FEATURES,
-            WARMUP,
-            materialize_thresholds=True,
-            threshold_shuffle_partitions="auto",
-        )
-    return _FULLGRID_CANDQ_CACHE[key]
+    """The full-width candq feeds the gate funnel entry and the bench
+    panel — the threshold relation is persisted once via the operator's
+    own materialize path, and the DataFrame is shared here."""
+    # NOT persisted at config grain: 30M-row materialization costs
+    # more than recomputing the (threshold-relation-persisted)
+    # explode + broadcast decode for the funnel and signal
+    # consumers.  The threshold
+    # shuffle's exact partition count is derived from estimated
+    # side-relation rows (sweep.derive_threshold_partitions) — the
+    # same sizing at any SF, no host-tuned constants.
+    return sweep_candidates_with_thresholds(
+        with_cross_features(_featg(spark, sf_dir)),
+        spark,
+        gen600_full_grid(GEN600_FULL_BAR_FEATURES),
+        _FULLGRID_FEATURES,
+        WARMUP,
+        materialize_thresholds=True,
+        threshold_shuffle_partitions="auto",
+    )
 
 
 _SWEEP_FULLGRID_ORACLE = _materialize(
@@ -930,83 +915,66 @@ _TRADES_BASE = f"""WITH {BARS_DUCKDB_CTE},
 _PRIVATE = lambda df: df.drop(*[c for c in df.columns if c.startswith("_")])  # noqa: E731
 
 
-#: ten eval/WFO queries consume the identical champion-trades relation;
-#: persist it once per (session, sf_dir) so the bars scan + window stack +
-#: barrier sim run once, not ten times (the driver and bench.py both call
-#: queries sequentially in one session)
-_TRADES_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@_side_cached
 def _champion_trades(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _TRADES_CACHE:
-        _TRADES_CACHE[key] = _trades_df(
-            spark, sf_dir, gen720_grid(), champion_signal()
-        ).persist()
-    return _TRADES_CACHE[key]
+    """Ten eval/WFO queries consume the identical champion-trades
+    relation; persisted so the bars scan + window stack + barrier sim run
+    once, not ten times (the driver and bench.py both call queries
+    sequentially in one session)."""
+    return _trades_df(spark, sf_dir, gen720_grid(), champion_signal()).persist()
 
 
-#: shared per-config intermediates (120-row relations each consumed by
-#: 2-4 downstream eval queries) — persisted like the trades they derive from
-_EVAL_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-#: distinct-symbol count per (session, sf_dir): the scalar that sizes every
-#: eval layer's cached partition count (round 13 — the former per-layer
-#: count()-then-repartition() ran TWO materialization jobs per layer; the
-#: layer row count is config-grain, ≤ symbols × grid, so ONE tiny count on
-#: the persisted bars relation sizes all five layers analytically and each
-#: layer materializes exactly once).  Cleared by reset_plan_caches so every
-#: bench pass pays it again — no cross-run precomputation.
-_NSYM_CACHE: dict[tuple[int, str], int] = {}
-
-
+@_side_cached
 def _n_symbols(spark: SparkSession, sf_dir: str) -> int:
-    key = (id(spark), sf_dir)
-    if key not in _NSYM_CACHE:
-        _NSYM_CACHE[key] = (
-            _bars(spark, sf_dir).select("symbol").distinct().count()
-        )
-    return _NSYM_CACHE[key]
+    """Distinct-symbol count: the scalar that sizes every eval layer's
+    cached partition count (round 13 — the former per-layer
+    count()-then-repartition() ran TWO materialization jobs per layer; the
+    layer row count is config-grain, ≤ symbols × grid, so ONE tiny count on
+    the persisted bars relation sizes all five layers analytically and each
+    layer materializes exactly once).  Cleared by reset_plan_caches so every
+    bench pass pays it again — no cross-run precomputation."""
+    return _bars(spark, sf_dir).select("symbol").distinct().count()
 
 
+@_side_cached
 def _eval_layer(spark: SparkSession, sf_dir: str, which: str) -> DataFrame:
-    key = (id(spark), sf_dir, which)
-    if key not in _EVAL_CACHE:
-        trades = _champion_trades(spark, sf_dir)
-        if which == "moments":
-            df = EM.trade_moments(trades)
-        elif which == "tail":
-            df = EM.tail_metrics(trades)
-        elif which == "folds":
-            df = WF.wf_fold_metrics(trades)
-        elif which == "pbo":
-            df = WF.cpcv_pbo(trades, spark)
-        else:  # evalues
-            df = EM.evalues(trades, _eval_layer(spark, sf_dir, "moments"))
-        # config-level relations are small at any BAR scale, but their row
-        # count tracks (symbols × grid) — derive the cached partition count
-        # from that product (symbols counted once per (session, sf_dir) on
-        # the persisted bars; grid size is known in Python), so a
-        # thousand-symbol corpus fans downstream stages out while the test
-        # fixture still schedules one task per stage.  Round 13 (§7.3/§5):
-        # the analytic estimate replaces the former count()-then-
-        # repartition() double materialization — one job per layer, not
-        # two; repartition (not coalesce) keeps the upstream trades
-        # aggregation parallel.  The estimate is an upper bound (configs
-        # with zero trades drop out of the aggregate), which only ever
-        # rounds the partition count up — sizing, not semantics.  The
-        # fold-grain layers carry a small known fan factor on top of the
-        # config grain (k walk-forward folds; C(6,2) CPCV splits).
-        fan = {
-            "folds": WF.N_FOLDS,
-            "pbo": WF.CPCV_BLOCKS * (WF.CPCV_BLOCKS - 1) // 2,
-        }.get(which, 1)
-        est_rows = _n_symbols(spark, sf_dir) * len(gen720_grid()) * fan
-        n_parts = max(1, min(32, est_rows // 5_000 + 1))
-        out = df.repartition(n_parts).persist()
-        out.count()  # materialize once
-        _EVAL_CACHE[key] = out
-    return _EVAL_CACHE[key]
+    """Shared per-config intermediates (120-row relations each consumed by
+    2-4 downstream eval queries) — persisted like the trades they derive
+    from."""
+    trades = _champion_trades(spark, sf_dir)
+    if which == "moments":
+        df = EM.trade_moments(trades)
+    elif which == "tail":
+        df = EM.tail_metrics(trades)
+    elif which == "folds":
+        df = WF.wf_fold_metrics(trades)
+    elif which == "pbo":
+        df = WF.cpcv_pbo(trades, spark)
+    else:  # evalues
+        df = EM.evalues(trades, _eval_layer(spark, sf_dir, "moments"))
+    # config-level relations are small at any BAR scale, but their row
+    # count tracks (symbols × grid) — derive the cached partition count
+    # from that product (symbols counted once per (session, sf_dir) on
+    # the persisted bars; grid size is known in Python), so a
+    # thousand-symbol corpus fans downstream stages out while the test
+    # fixture still schedules one task per stage.  Round 13 (§7.3/§5):
+    # the analytic estimate replaces the former count()-then-
+    # repartition() double materialization — one job per layer, not
+    # two; repartition (not coalesce) keeps the upstream trades
+    # aggregation parallel.  The estimate is an upper bound (configs
+    # with zero trades drop out of the aggregate), which only ever
+    # rounds the partition count up — sizing, not semantics.  The
+    # fold-grain layers carry a small known fan factor on top of the
+    # config grain (k walk-forward folds; C(6,2) CPCV splits).
+    fan = {
+        "folds": WF.N_FOLDS,
+        "pbo": WF.CPCV_BLOCKS * (WF.CPCV_BLOCKS - 1) // 2,
+    }.get(which, 1)
+    est_rows = _n_symbols(spark, sf_dir) * len(gen720_grid()) * fan
+    n_parts = max(1, min(32, est_rows // 5_000 + 1))
+    out = df.repartition(n_parts).persist()
+    out.count()  # materialize once
+    return out
 
 
 # NB: same-grain eval entries are consolidated into per-config panels so
@@ -1493,27 +1461,22 @@ def q_sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SK.heavy_hitters_panel(load_table(spark, sf_dir, "documents"))
 
 
-#: the rare-first shingle-array relation feeds both Jaccard and
-#: MinHash-LSH — persist once per (session, sf_dir) like _champion_trades
-_ARRS_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@_side_cached
 def _doc_arrs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _ARRS_CACHE:
-        # materialize the (doc_id, shingle) posting relation once while
-        # the arrs side-cache is built: _shingle_arrays otherwise scans
-        # the raw text twice (frequency-aggregate input + join-back left
-        # side), and that double text-grain pass showed up in the plan
-        # audit of the near-dup union job.  The posting cache lives only
-        # for the eager arrs build, then drops.
-        docs = load_table(spark, sf_dir, "documents")
-        sh = DD._doc_shingles(docs).persist()
-        arrs = DD._shingle_arrays(docs, sh=sh).persist()
-        arrs.count()  # eager: fold the postings into arrs NOW
-        sh.unpersist()
-        _ARRS_CACHE[key] = arrs
-    return _ARRS_CACHE[key]
+    """The rare-first shingle-array relation feeds both Jaccard and
+    MinHash-LSH — persisted like _champion_trades."""
+    # materialize the (doc_id, shingle) posting relation once while
+    # the arrs side-cache is built: _shingle_arrays otherwise scans
+    # the raw text twice (frequency-aggregate input + join-back left
+    # side), and that double text-grain pass showed up in the plan
+    # audit of the near-dup union job.  The posting cache lives only
+    # for the eager arrs build, then drops.
+    docs = load_table(spark, sf_dir, "documents")
+    sh = DD._doc_shingles(docs).persist()
+    arrs = DD._shingle_arrays(docs, sh=sh).persist()
+    arrs.count()  # eager: fold the postings into arrs NOW
+    sh.unpersist()
+    return arrs
 
 
 def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1527,18 +1490,13 @@ def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: the MinHash near-dup pair relation feeds both the pair entry and the
-#: cluster-resolution entry — persist once per (session, sf_dir)
-_MH_PAIRS_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@_side_cached
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _MH_PAIRS_CACHE:
-        _MH_PAIRS_CACHE[key] = DD.minhash_lsh_pairs(
-            load_table(spark, sf_dir, "documents"), arrs=_doc_arrs(spark, sf_dir)
-        ).persist()
-    return _MH_PAIRS_CACHE[key]
+    """The MinHash near-dup pair relation feeds both the pair entry and
+    the cluster-resolution entry — persisted once."""
+    return DD.minhash_lsh_pairs(
+        load_table(spark, sf_dir, "documents"), arrs=_doc_arrs(spark, sf_dir)
+    ).persist()
 
 
 #: the normalized near-dup pair schema: every method-specific column is
@@ -1858,23 +1816,16 @@ def q_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SK.weighted_reservoir_sample(load_table(spark, sf_dir, "documents"))
 
 
-#: learned BPE merge table per (session, sf_dir): training is 8
-#: sequential distributed rounds (inherently serial — each argmax feeds
-#: the next round's apply fold), so the catalog shares one table the
-#: way it shares the IVF centroids; cleared by reset_plan_caches
-_BPE_MERGES_CACHE: dict[tuple[int, str], list] = {}
-
-
+@_side_cached
 def _bpe_merges(spark: SparkSession, sf_dir: str) -> list:
-    key = (id(spark), sf_dir)
-    if key not in _BPE_MERGES_CACHE:
-        # spread the one-file scan before the vocabulary explode (guide
-        # §2.5): the word-type aggregate is partition-invariant, so the
-        # learned merges are unchanged
-        _BPE_MERGES_CACHE[key] = TX.bpe_train(
-            DD.spread_narrow_scan(load_table(spark, sf_dir, "documents"))
-        )
-    return _BPE_MERGES_CACHE[key]
+    """Learned BPE merge table: training is 8 sequential distributed
+    rounds (inherently serial — each argmax feeds the next round's apply
+    fold), so the catalog shares one table the way it shares the IVF
+    centroids."""
+    # spread the one-file scan before the vocabulary explode (guide
+    # §2.5): the word-type aggregate is partition-invariant, so the
+    # learned merges are unchanged
+    return TX.bpe_train(DD.spread_narrow_scan(load_table(spark, sf_dir, "documents")))
 
 
 @register(
@@ -2466,57 +2417,41 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TX.mixture_sample(load_table(spark, sf_dir, "documents"))
 
 
-#: trained IVF centroid matrix per (session, sf_dir) — kmeans_ivf_assign,
-#: sim_topk_methods (method='ivf_cell', merged round 10), and the semdedup
-#: branch of dedup_neardup_pairs
-#: consume the SAME quantizer, so Lloyd's runs once per session, not per
-#: entry (k x dim doubles; cleared by reset_plan_caches like every
-#: side-cache).  The cell count is CORPUS-SIZED (semdedup_cell_count —
-#: k=8 at the 500-vector correctness fixtures, where it is byte-identical
-#: to the static k=8 DuckDB twins; finer, sample-trained above that), and
-#: the corpus count is cached alongside so sizing never re-scans.
-_KMEANS_CENTS_CACHE: dict[tuple[int, str], tuple[int, list]] = {}
-
-
+@_side_cached
 def _kmeans_cents_n(spark: SparkSession, sf_dir: str) -> tuple[int, list]:
-    key = (id(spark), sf_dir)
-    if key not in _KMEANS_CENTS_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        n = emb.count()
-        k = DD.semdedup_cell_count(n)
-        _KMEANS_CENTS_CACHE[key] = (
-            n,
-            SIM.kmeans_train(
-                emb,
-                k=k,
-                train_sample=(
-                    SIM.KMEANS_TRAIN_FACTOR * k if k > SIM.KMEANS_K else None
-                ),
-                n=n,
-            ),
-        )
-    return _KMEANS_CENTS_CACHE[key]
+    """Trained IVF centroid matrix — kmeans_ivf_assign, sim_topk_methods
+    (method='ivf_cell', merged round 10), and the semdedup branch of
+    dedup_neardup_pairs consume the SAME quantizer, so Lloyd's runs once
+    per session, not per entry (k x dim doubles).  The cell count is
+    CORPUS-SIZED (semdedup_cell_count — k=8 at the 500-vector correctness
+    fixtures, where it is byte-identical to the static k=8 DuckDB twins;
+    finer, sample-trained above that), and the corpus count is cached
+    alongside so sizing never re-scans."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    n = emb.count()
+    k = DD.semdedup_cell_count(n)
+    return (
+        n,
+        SIM.kmeans_train(
+            emb,
+            k=k,
+            train_sample=(SIM.KMEANS_TRAIN_FACTOR * k if k > SIM.KMEANS_K else None),
+            n=n,
+        ),
+    )
 
 
 def _kmeans_cents(spark: SparkSession, sf_dir: str) -> list:
     return _kmeans_cents_n(spark, sf_dir)[1]
 
 
-#: trained PQ codebook per (session, sf_dir) — ADVICE r9: every
-#: sim_topk_methods build was retraining the m x ksub grouped-Lloyd's
-#: job; training is a one-time index-build step, so the catalog shares
-#: one book the way it shares the IVF centroids and the BPE merges;
-#: cleared by reset_plan_caches like every side-cache
-_PQ_BOOK_CACHE: dict[tuple[int, str], list] = {}
-
-
+@_side_cached
 def _pq_book(spark: SparkSession, sf_dir: str) -> list:
-    key = (id(spark), sf_dir)
-    if key not in _PQ_BOOK_CACHE:
-        _PQ_BOOK_CACHE[key] = SIM.pq_train(
-            load_table(spark, sf_dir, "embeddings")
-        )
-    return _PQ_BOOK_CACHE[key]
+    """Trained PQ codebook — ADVICE r9: every sim_topk_methods build was
+    retraining the m x ksub grouped-Lloyd's job; training is a one-time
+    index-build step, so the catalog shares one book the way it shares
+    the IVF centroids and the BPE merges."""
+    return SIM.pq_train(load_table(spark, sf_dir, "embeddings"))
 
 
 @register("kmeans_ivf_assign", TO.kmeans_assign_sql())
@@ -2537,25 +2472,20 @@ def q_kmeans_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 from ..operators import classifier as CLF  # noqa: E402
 
 
-#: persisted logreg feature frame per (session, sf_dir): the repetition
-#: HOF stack dominates the whole training run, so train + scoring share
-#: one materialization; cleared by reset_plan_caches like every side-cache
-_LOGREG_RAW_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@_side_cached
 def _logreg_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _LOGREG_RAW_CACHE:
-        # spread the one-file scan before the repetition HOF stack: the
-        # feature pass — the heaviest part of training — otherwise runs
-        # in ONE task, and the localCheckpoint'd feature relation then
-        # keeps that single partition for every GD-step aggregate
-        # (guide §2.5).  Gradients are order-free integer-scaled sums,
-        # so partitioning cannot change any certified value.
-        _LOGREG_RAW_CACHE[key] = CLF.logreg_features(
-            DD.spread_narrow_scan(load_table(spark, sf_dir, "documents"))
-        ).persist()
-    return _LOGREG_RAW_CACHE[key]
+    """Persisted logreg feature frame: the repetition HOF stack dominates
+    the whole training run, so train + scoring share one
+    materialization."""
+    # spread the one-file scan before the repetition HOF stack: the
+    # feature pass — the heaviest part of training — otherwise runs
+    # in ONE task, and the localCheckpoint'd feature relation then
+    # keeps that single partition for every GD-step aggregate
+    # (guide §2.5).  Gradients are order-free integer-scaled sums,
+    # so partitioning cannot change any certified value.
+    return CLF.logreg_features(
+        DD.spread_narrow_scan(load_table(spark, sf_dir, "documents"))
+    ).persist()
 
 
 @register("logreg_quality_scores", TO.logreg_scores_sql())

@@ -10,8 +10,11 @@ document-frequency cut.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import duckdb
 import pytest
+from py4j.protocol import Py4JError
 
 from conftest import compare_frames
 
@@ -19,6 +22,7 @@ from rangebar_patterns_spark.operators.dedup import (
     _shingle_arrays,
     ngram_candidates,
     ngram_jaccard_pairs,
+    spread_narrow_scan,
 )
 from rangebar_patterns_spark.plans.textops_oracle import ngram_jaccard_capped_sql
 
@@ -209,3 +213,26 @@ def test_simhash_pairs_match_bruteforce_all_pairs(spark):
     assert len(got) == len(set(got))          # each pair exactly once
     for r in rows:
         assert r["hamming"] == bin(r["sh_a"] ^ r["sh_b"]).count("1")
+
+
+@pytest.mark.parametrize("exc", [AttributeError("_jdf"), Py4JError("no stats")])
+def test_spread_narrow_scan_warns_on_stats_fallback(spark, exc):
+    """A plan whose statistics call raises (Spark Connect has no ``_jdf``;
+    a stats-less plan raises in the JVM) spreads to the session width —
+    with a warning, not silently."""
+
+    class _Jdf:
+        def queryExecution(self):
+            raise exc
+
+    class _Docs:
+        sparkSession = spark
+        _jdf = _Jdf()
+        rdd = SimpleNamespace(getNumPartitions=lambda: 1)
+
+        def repartition(self, width, key):
+            return ("spread", width)
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with pytest.warns(RuntimeWarning, match="no plan statistics"):
+        assert spread_narrow_scan(_Docs()) == ("spread", n)

@@ -225,21 +225,60 @@ def test_gen800_plan_is_join_free_past_the_bar_lookup(spark):
 
 
 def test_reset_plan_caches_covers_every_module_cache(spark):
-    """bench.py relies on reset_plan_caches to make repeat passes cold; a
-    module-level *_CACHE dict added without registering it in the reset
-    list would silently turn the medians warm.  Enumerate every cache in
-    the catalog namespace, plant a sentinel, and require reset to clear
-    them all."""
+    """bench.py relies on reset_plan_caches to make repeat passes cold.
+    Every side cache lives in the one catalog registry ``_SIDE_CACHE``
+    keyed by session object, so: no package module defines another
+    module-level *_CACHE dict, no package source keys anything on the
+    session's numeric id, and reset empties the registry in place (the
+    benchmark's cache probe holds the dict object itself)."""
+    import importlib
+    import pathlib
+    import pkgutil
+    import re
+
+    import rangebar_patterns_spark as pkg
     import rangebar_patterns_spark.plans.catalog as cat
 
-    cache_names = [
-        n
-        for n, v in vars(cat).items()
+    caches = [
+        f"{m.name}.{n}"
+        for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")
+        for n, v in vars(importlib.import_module(m.name)).items()
         if n.endswith("_CACHE") and isinstance(v, dict)
     ]
-    assert len(cache_names) >= 8, cache_names
-    for n in cache_names:
-        getattr(cat, n)["__sentinel__"] = None
+    assert caches == [f"{cat.__name__}._SIDE_CACHE"], caches
+    root = pathlib.Path(pkg.__file__).parent
+    id_keyed = [
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if re.search(r"\bid\(\s*spark", p.read_text())
+    ]
+    assert not id_keyed, id_keyed
+
+    registry = cat._SIDE_CACHE
+    registry[("__sentinel__",)] = None
     cat.reset_plan_caches(spark)
-    stale = [n for n in cache_names if getattr(cat, n)]
-    assert not stale, f"reset_plan_caches does not clear: {stale}"
+    assert cat._SIDE_CACHE is registry and not registry
+
+
+def test_side_cache_builds_once_per_session_dir_and_args(spark):
+    """The registry builds once per (session, sf_dir, args), reuses the
+    result on a repeat call, and rebuilds after the reset clears it."""
+    import rangebar_patterns_spark.plans.catalog as cat
+
+    builds = []
+
+    @cat._side_cached
+    def _probe(session, sf_dir, *args):
+        builds.append((session, sf_dir, args))
+        return object()
+
+    s1, s2 = object(), object()
+    calls = [(s1, "a"), (s2, "a"), (s1, "b"), (s1, "a", "x"), (s1, "a", "y")]
+    first = [_probe(*c) for c in calls]
+    assert len(builds) == len(calls)
+    assert all(_probe(*c) is f for c, f in zip(calls, first))
+    assert len(builds) == len(calls)
+    cat.reset_plan_caches(spark)
+    assert _probe(s1, "a") is not first[0]
+    assert len(builds) == len(calls) + 1
+    cat._SIDE_CACHE.pop(("_probe", s1, "a"))

@@ -226,10 +226,11 @@ def test_ivf_pq_rerank_recall(spark):
 def test_pq_book_session_cached(spark, monkeypatch):
     """ADVICE r9: the PQ codebook trains once per (session, sf_dir) and
     repeat builds serve from the shared book — training is an
-    index-build step, not part of serving."""
+    index-build step, not part of serving.  The reset releases the book,
+    so the next build trains again."""
     from rangebar_patterns_spark.plans import catalog as C
 
-    C._PQ_BOOK_CACHE.clear()
+    C.reset_plan_caches(spark)
     calls = {"n": 0}
     real = C.SIM.pq_train
 
@@ -242,4 +243,5 @@ def test_pq_book_session_cached(spark, monkeypatch):
     b2 = C._pq_book(spark, SF_DIR)
     assert calls["n"] == 1 and b1 is b2
     C.reset_plan_caches(spark)
-    assert not C._PQ_BOOK_CACHE
+    C._pq_book(spark, SF_DIR)
+    assert calls["n"] == 2

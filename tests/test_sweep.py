@@ -66,6 +66,21 @@ def test_sweep_scan_count_independent_of_config_count(spark):
     assert ns > 0
 
 
+def _hand_cand(spark, rows):
+    """A hand-built candidate relation: one tuple per row in
+    ``_CAND_COLUMNS`` order."""
+    from rangebar_patterns_spark.operators.sweep import _CAND_COLUMNS
+
+    return spark.createDataFrame(
+        rows,
+        "config_id string, formation string, feature1 string, q1 double, "
+        "dir1 string, feature2 string, q2 double, dir2 string, side string, "
+        "symbol string, rn long, close_time_ms long, "
+        "threshold_decimal_bps int, entry_price double, next_dir int, "
+        "f1_val double, f2_val double",
+    ).select(*_CAND_COLUMNS)
+
+
 def test_feature_quantile_trap_partner_nulls(spark):
     """Regression for the Feature Quantile Trap: two configs sharing
     (formation, feature1, q1) but with different feature2 must get
@@ -77,10 +92,7 @@ def test_feature_quantile_trap_partner_nulls(spark):
     from rangebar_patterns_spark.functions.series_quantile import (
         excl_quantile_stream,
     )
-    from rangebar_patterns_spark.operators.sweep import (
-        _CAND_COLUMNS,
-        with_signalset_quantiles,
-    )
+    from rangebar_patterns_spark.operators.sweep import with_signalset_quantiles
 
     # candidate stream for two configs: cfgA pairs f1 with "dense" (all
     # rows survive), cfgB pairs f1 with "sparse" (every 3rd row dropped
@@ -97,14 +109,7 @@ def test_feature_quantile_trap_partner_nulls(spark):
                 ("cfgB", "form", "f1", 0.5, ">", "sparse", 0.5, ">", "long",
                  "S", i + 1, 1000 + i, 250, 100.0, 1, v, 1.0)
             )
-    cand = spark.createDataFrame(
-        rows,
-        "config_id string, formation string, feature1 string, q1 double, "
-        "dir1 string, feature2 string, q2 double, dir2 string, side string, "
-        "symbol string, rn long, close_time_ms long, "
-        "threshold_decimal_bps int, entry_price double, next_dir int, "
-        "f1_val double, f2_val double",
-    ).select(*_CAND_COLUMNS)
+    cand = _hand_cand(spark, rows)
 
     out = with_signalset_quantiles(cand, lookback=10).toPandas()
     for cfg, seq in [
@@ -118,6 +123,41 @@ def test_feature_quantile_trap_partner_nulls(spark):
             .to_numpy("float64", na_value=np.nan)
         )
         assert len(got) == len(expected), cfg
+        assert np.array_equal(got, expected, equal_nan=True), cfg
+
+
+def test_multi_q_sharing_guard_compares_values(spark):
+    """The multi-q pass reuses the first q-subrun's series for every q of
+    a (formation, feature, partner, symbol) run only when the subruns
+    match exactly — rn AND values.  Two q's that share rn but carry
+    different f1_val must each get thresholds over their own values."""
+    import numpy as np
+
+    from rangebar_patterns_spark.functions.series_quantile import (
+        excl_quantile_stream,
+    )
+    from rangebar_patterns_spark.operators.sweep import with_signalset_quantiles
+
+    seqs = {
+        ("cfgA", 0.5): [float((i * 37) % 101) for i in range(60)],
+        ("cfgB", 0.9): [float((i * 53) % 97) for i in range(60)],
+    }
+    rows = [
+        (cfg, "form", "f1", q, ">", "dense", 0.5, ">", "long", "S",
+         i + 1, 1000 + i, 250, 100.0, 1, v, 1.0)
+        for (cfg, q), seq in seqs.items()
+        for i, v in enumerate(seq)
+    ]
+    cand = _hand_cand(spark, rows)
+
+    out = with_signalset_quantiles(cand, lookback=10).toPandas()
+    for (cfg, q), seq in seqs.items():
+        expected = excl_quantile_stream(np.array(seq), q, 10)
+        got = (
+            out[out.config_id == cfg]
+            .sort_values("rn")["f1_thr"]
+            .to_numpy("float64", na_value=np.nan)
+        )
         assert np.array_equal(got, expected, equal_nan=True), cfg
 
 

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for every declared catalog query to
-plans/r12/<query>_<tag>.txt (tag = before/after, argv[1]).
+"""Dump .explain("formatted") for every declared catalog query, plus the
+restored bench-only entries, to plans/<round>/<query>_<tag>.txt.
 
-Usage: python tools/explain_r12.py before [query ...]
+Usage: python tools/explain_plans.py <round> <tag> [query ...]
+       e.g. python tools/explain_plans.py r14 before sweep_panel
 
 Runs at $SPARK_GRAFT_SF_DIR (default sf0.1) so plan shapes match the
 bench tier.  Explain only — no execution — except that catalog side
@@ -20,20 +21,24 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    rnd, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r12"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd
     )
     os.makedirs(out_dir, exist_ok=True)
 
     from rangebar_patterns_spark.session import get_spark
 
-    spark = get_spark("explain_r12")
+    spark = get_spark("explain_plans")
     import __spark_entry__ as entrymod
 
-    qs = entrymod.queries()
+    qs = dict(entrymod.queries())
+    from rangebar_patterns_spark.plans.catalog import RESTORED_QUERIES
+
+    qs.update(RESTORED_QUERIES)
     if names:
         qs = {n: qs[n] for n in names}
     for name, fn in qs.items():
