@@ -216,37 +216,6 @@ def excl_quantile_stream(
     return out
 
 
-def with_series_excl_quantile(
-    df: DataFrame,
-    col: str,
-    p: float,
-    out_col: str,
-    lookback: int | None = None,
-    order_col: str = "rn",
-    partition_cols: tuple[str, ...] = ("symbol",),
-) -> DataFrame:
-    """Attach ``quantileExactExclusive(p)(col) OVER (PARTITION BY
-    partition_cols ORDER BY order_col ROWS BETWEEN <lookback|UNBOUNDED>
-    PRECEDING AND 1 PRECEDING)`` as ``out_col`` via one Arrow-batched pass
-    per series.
-
-    Scale contract: one pandas group per (symbol[, threshold]) series —
-    bounded at ~1.5M rows (reference cardinality, BASELINE.md), O(n log n)
-    compute, parallel across series.  At 100 TB the series count is the
-    parallelism axis, exactly like every window in :mod:`..operators.windows`.
-    """
-    schema = StructType(df.schema.fields + [StructField(out_col, DoubleType())])
-    names = [f.name for f in schema.fields]
-
-    def compute(pdf):
-        pdf = pdf.sort_values(order_col, kind="mergesort").reset_index(drop=True)
-        vals = pdf[col].to_numpy(dtype="float64", na_value=np.nan)
-        pdf[out_col] = excl_quantile_stream(vals, p, lookback)
-        return pdf[names]
-
-    return df.groupBy(*partition_cols).applyInPandas(compute, schema)
-
-
 def with_series_excl_quantiles(
     df: DataFrame,
     specs: dict[str, tuple[str, float]],
@@ -254,11 +223,19 @@ def with_series_excl_quantiles(
     order_col: str = "rn",
     partition_cols: tuple[str, ...] = ("symbol",),
 ) -> DataFrame:
-    """Multi-threshold variant of :func:`with_series_excl_quantile`:
-    ``specs`` maps out_col -> (source col, p); ALL thresholds are computed
-    in ONE Arrow-batched pass per series (one shuffle instead of
-    len(specs)) — the formation-gate stack (signals.GATE_QUANTILES) needs
-    five of these per bar."""
+    """Attach ``quantileExactExclusive(p)(src) OVER (PARTITION BY
+    partition_cols ORDER BY order_col ROWS BETWEEN <lookback|UNBOUNDED>
+    PRECEDING AND 1 PRECEDING)`` for every ``specs`` entry (out_col ->
+    (source col, p)); ALL thresholds are computed in ONE Arrow-batched
+    pass per series (one shuffle instead of len(specs)) — the
+    formation-gate stack (signals.GATE_QUANTILES) needs five of these per
+    bar, the bar-feature ti gate one.
+
+    Scale contract: one pandas group per (symbol[, threshold]) series —
+    bounded at ~1.5M rows (reference cardinality, BASELINE.md), O(n log n)
+    compute, parallel across series.  At 100 TB the series count is the
+    parallelism axis, exactly like every window in :mod:`..operators.windows`.
+    """
     schema = StructType(
         df.schema.fields
         + [StructField(out_col, DoubleType()) for out_col in specs]

@@ -34,6 +34,8 @@ documents a 2.36 GB → 1.6 MB difference).
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
 from dataclasses import dataclass
 from itertools import chain
 
@@ -103,9 +105,9 @@ def gen500_grid() -> list[SweepConfig]:
     """The reference's gen500-scale sweep: 1,008 configs (6 formations ×
     12 ordered feature pairs × 14 quantile combos) — the workload
     BASELINE.md prices at 1,008 queries × (1-8)s / 16-way on ClickHouse.
-    Here it is one shared plan (see ``with_signalset_quantiles`` for the
-    threshold dedup that makes the Python pass O(formations × features ×
-    qs), not O(configs))."""
+    Here it is one shared plan (see :func:`sweep_candidates_with_thresholds`
+    for the threshold dedup that makes the Python pass O(formations ×
+    feature pairs × qs), not O(configs))."""
     from .signals import SWEEP_FORMATION_NAMES
 
     feats = ["ofi", "price_impact", "turnover_imbalance", "aggression_ratio"]
@@ -195,6 +197,15 @@ def base_candidate_filter(warmup: int) -> F.Column:
     return base_eligibility(warmup)
 
 
+def _formation_explode(formations: tuple[str, ...]) -> F.Column:
+    """One row per (bar, formation whose full signal predicate holds) —
+    the formation explode every sweep path and the row estimate share."""
+    formation_arr = F.array(
+        *[F.when(FORMATIONS[name].signal(), F.lit(name)) for name in formations]
+    )
+    return F.explode(F.filter(formation_arr, lambda x: x.isNotNull()))
+
+
 _CAND_COLUMNS = [
     "config_id",
     "formation",
@@ -233,15 +244,9 @@ def sweep_candidates(
     evaluating predicates the grid can't keep."""
     if formations is None:
         formations = tuple(FORMATIONS)
-    formation_arr = F.array(
-        *[F.when(FORMATIONS[name].signal(), F.lit(name)) for name in formations]
-    )
     cand = (
         feat.filter(base_candidate_filter(warmup))
-        .withColumn(
-            "formation",
-            F.explode(F.filter(formation_arr, lambda x: x.isNotNull())),
-        )
+        .withColumn("formation", _formation_explode(formations))
         .join(F.broadcast(configs), "formation")
     )
     fmap = F.create_map(*chain.from_iterable((F.lit(c), F.col(c)) for c in feature_cols))
@@ -256,8 +261,11 @@ def sweep_candidates(
 def with_signalset_quantiles(
     cand: DataFrame, lookback: int = SIGNALSET_LOOKBACK
 ) -> DataFrame:
-    """W7: rolling exclusive quantiles of feature1/feature2 over the
-    per-config candidate sequence.
+    """W7 test reference: rolling exclusive quantiles of feature1/feature2
+    over the per-config candidate sequence, in the layered shape
+    (candidates first, thresholds joined back).  It has no production
+    caller — the catalog runs :func:`sweep_candidates_with_thresholds`,
+    and tests/test_sweep.py pins that path against this one.
 
     Key sweep-scale property: a config's *candidate set* is fully
     determined by (formation, feature pair) — the base filter and the
@@ -293,14 +301,10 @@ def with_signalset_quantiles(
     # runner pays a fixed per-group cost (frame assembly + schema
     # conversion), so many small groups serialize on overhead; one
     # bucketed frame sorts once and walks contiguous key runs with numpy
-    # boundary detection (the same shape the candidate-grain fullgrid
-    # kernel uses).  The bucket hash EXCLUDES q so every q of a series
-    # lands in the same run: the series (candidate membership and values)
-    # is q-independent by the dedup-key property above, so all of a run's
-    # q's come from ONE pass of sorted-window maintenance
-    # (excl_quantile_stream_multi), each extra q costing only its O(1)
-    # pick — guarded by an exact rn/length/value equality check that falls
-    # back to the per-subrun stream if the invariant ever failed.
+    # boundary detection (the same shape the fused kernels use).  Each
+    # (formation, feature, partner, symbol, q) run is one plain
+    # excl_quantile_stream — the reference stays per-series simple; the
+    # fused kernels own the multi-q window sharing.
     def compute(pdf):
         pdf = pdf.sort_values(
             ["formation", "feature", "partner", "symbol", "q", "rn"],
@@ -313,7 +317,6 @@ def with_signalset_quantiles(
         pt = pdf["partner"].to_numpy()
         sy = pdf["symbol"].to_numpy()
         qv = pdf["q"].to_numpy("float64")
-        rn = pdf["rn"].to_numpy()
         vals = pdf["val"].to_numpy("float64", na_value=np.nan)
         if n:
             change = (
@@ -322,38 +325,13 @@ def with_signalset_quantiles(
                     | (ft[1:] != ft[:-1])
                     | (pt[1:] != pt[:-1])
                     | (sy[1:] != sy[:-1])
+                    | (qv[1:] != qv[:-1])
                 )
                 + 1
             )
             bounds = np.concatenate(([0], change, [n]))
             for s, e in zip(bounds[:-1], bounds[1:]):
-                qrun = qv[s:e]
-                qch = np.flatnonzero(qrun[1:] != qrun[:-1]) + 1
-                qb = np.concatenate(([0], qch, [e - s]))
-                first_len = qb[1] - qb[0]
-                first_rn = rn[s : s + first_len]
-                series = vals[s : s + first_len]
-                shared_qs = []
-                shared_spans = []
-                for a, b in zip(qb[:-1], qb[1:]):
-                    if (
-                        (b - a) == first_len
-                        and np.array_equal(rn[s + a : s + b], first_rn)
-                        and np.array_equal(
-                            vals[s + a : s + b], series, equal_nan=True
-                        )
-                    ):
-                        shared_qs.append(float(qrun[a]))
-                        shared_spans.append((a, b))
-                    else:  # invariant miss: compute this subrun alone
-                        out[s + a : s + b] = excl_quantile_stream(
-                            vals[s + a : s + b], float(qrun[a]), lookback
-                        )
-                outs = excl_quantile_stream_multi(
-                    series, tuple(shared_qs), lookback
-                )
-                for (a, b), thr_arr in zip(shared_spans, outs):
-                    out[s + a : s + b] = thr_arr
+                out[s:e] = excl_quantile_stream(vals[s:e], float(qv[s]), lookback)
         pdf["thr"] = out
         return pdf[["formation", "feature", "q", "partner", "symbol", "rn", "thr"]]
 
@@ -418,9 +396,6 @@ THRESHOLD_ROWS_PER_PARTITION = 65_536
 THRESHOLD_MAX_PARTITIONS = 4_096
 
 
-import threading
-from contextlib import contextmanager
-
 #: guards exact_shuffle_partitions — the conf mutation is session-global,
 #: so two threads planning concurrently would compile each other's counts
 #: into their cached plans; non-blocking acquire turns that silent
@@ -475,23 +450,18 @@ def grid_pairs_per_formation(grid: list[SweepConfig]) -> dict[str, int]:
 def derive_grid_shuffle_partitions(
     feat: DataFrame, spark: SparkSession, grid: list[SweepConfig], warmup: int
 ) -> int:
-    """Caller-facing wrapper over :func:`derive_threshold_partitions` for
-    sizing a whole sweep plan (the threshold shuffle dominates; every
-    downstream step is a broadcast join or an aggregate over its output)."""
-    formations = grid_formations(grid)
-    formation_arr = F.array(
-        *[F.when(FORMATIONS[name].signal(), F.lit(name)) for name in formations]
-    )
-    return derive_threshold_partitions(
-        feat, spark, warmup, formation_arr, grid_pairs_per_formation(grid)
+    """Threshold-shuffle partition count for a whole sweep plan, sized from
+    estimated side-relation rows (:func:`estimate_pair_rows` /
+    :func:`partitions_from_pair_rows`) — the threshold shuffle dominates;
+    every downstream step is a broadcast join or an aggregate over its
+    output.  The estimate errs toward smaller, safer Arrow frames."""
+    return partitions_from_pair_rows(
+        estimate_pair_rows(feat, warmup, grid_pairs_per_formation(grid)), spark
     )
 
 
 def estimate_pair_rows(
-    feat: DataFrame,
-    warmup: int,
-    formation_arr,
-    groups_per_formation: dict[str, int],
+    feat: DataFrame, warmup: int, groups_per_formation: dict[str, int]
 ) -> int:
     """Estimated PAIR-GRAIN side-relation rows: candidate (bar, formation)
     memberships (one cheap aggregation over ``feat``, persisted by every
@@ -503,7 +473,7 @@ def estimate_pair_rows(
         for r in (
             feat.filter(base_candidate_filter(warmup))
             .select(
-                F.explode(F.filter(formation_arr, lambda x: x.isNotNull())).alias(
+                _formation_explode(tuple(sorted(groups_per_formation))).alias(
                     "formation"
                 )
             )
@@ -524,22 +494,6 @@ def partitions_from_pair_rows(est_rows: int, spark: SparkSession) -> int:
     return max(
         session_default,
         min(THRESHOLD_MAX_PARTITIONS, -(-est_rows // THRESHOLD_ROWS_PER_PARTITION)),
-    )
-
-
-def derive_threshold_partitions(
-    feat: DataFrame,
-    spark: SparkSession,
-    warmup: int,
-    formation_arr,
-    groups_per_formation: dict[str, int],
-) -> int:
-    """Size the threshold shuffle from estimated side-relation rows (see
-    :func:`estimate_pair_rows` / :func:`partitions_from_pair_rows`).  The
-    estimate errs toward smaller, safer Arrow frames."""
-    return partitions_from_pair_rows(
-        estimate_pair_rows(feat, warmup, formation_arr, groups_per_formation),
-        spark,
     )
 
 
@@ -572,10 +526,8 @@ def sweep_candidates_with_thresholds(
     feature_cols: list[str],
     warmup: int,
     lookback: int = SIGNALSET_LOOKBACK,
-    materialize_thresholds: bool = False,
-    threshold_shuffle_partitions: int | str | None = None,
 ) -> DataFrame:
-    """Fused grid-scale path producing exactly
+    """The one production sweep threshold path, producing exactly
     ``with_signalset_quantiles(sweep_candidates(...))`` (equivalence
     pinned in tests/test_sweep.py) with config-grain work deferred to the
     very end.  Two Arrow kernel grains produce bit-identical rows; the
@@ -603,19 +555,17 @@ def sweep_candidates_with_thresholds(
     funnel aggregate — no shuffle ever moves config-grain or
     series-grain rows.
 
-    ``threshold_shuffle_partitions`` sizes the threshold shuffle's exact
-    partition count; pass ``"auto"`` to derive it from estimated
-    pair-grain rows (:func:`estimate_pair_rows` — one cheap aggregation
-    over ``feat``; at candidate grain that estimate proxies kernel
-    *work* per partition), an int to pin it, or None to leave the
-    session default in place."""
+    The threshold shuffle's exact partition count is always derived from
+    estimated pair-grain rows (:func:`estimate_pair_rows` — one cheap
+    aggregation over ``feat``; at candidate grain that estimate proxies
+    kernel *work* per partition), and the threshold relation is always
+    materialized once, inside that sizing scope."""
     same = [c.config_id for c in grid if c.feature1 == c.feature2]
     if same:
         raise ValueError(
             "sweep_candidates_with_thresholds keys series orientation by "
             "feature < partner and would silently drop same-feature "
-            f"configs — use the layered path for: {same[:3]}"
-            + ("..." if len(same) > 3 else "")
+            f"configs: {same[:3]}" + ("..." if len(same) > 3 else "")
         )
     formations = grid_formations(grid)
     # UNORDERED pair grain for the decode: grids may contain both
@@ -645,70 +595,45 @@ def sweep_candidates_with_thresholds(
         for pid in pair_ids.values()
     }
     feat_idx = {c: i for i, c in enumerate(feature_cols)}
-    formation_arr = F.array(
-        *[F.when(FORMATIONS[name].signal(), F.lit(name)) for name in formations]
-    )
     # kernel-grain dispatch + partition sizing share ONE cheap aggregate
-    # over ``feat``; narrow grids (fan-out below the dispatch floor) with
-    # pinned/None partitions never pay it
+    # over ``feat``
     ppf = grid_pairs_per_formation(grid)
     fan_out = max(ppf.values())
-    est_rows: int | None = None
-    if (
-        threshold_shuffle_partitions == "auto"
-        or fan_out >= SWEEP_CANDGRAIN_MIN_FANOUT
-    ):
-        est_rows = estimate_pair_rows(feat, warmup, formation_arr, ppf)
-    if threshold_shuffle_partitions == "auto":
-        threshold_shuffle_partitions = partitions_from_pair_rows(
-            est_rows, spark
-        )
+    est_rows = estimate_pair_rows(feat, warmup, ppf)
     candidate_grain = (
         fan_out >= SWEEP_CANDGRAIN_MIN_FANOUT
-        and est_rows is not None
         and est_rows >= SWEEP_CANDGRAIN_MIN_PAIR_ROWS
     )
     payload = ["close_time_ms", "threshold_decimal_bps", "entry_price", "next_dir"]
     # the threshold relation feeds every consumer branch — persist so the
-    # Arrow pass runs once.  ``threshold_shuffle_partitions`` sets the
-    # EXACT partition count for that one shuffle, sized from estimated
-    # pair-grain rows: at pair grain that bounds per-worker pandas rows
-    # directly (the session one-per-core default puts multi-million-row
-    # frames in each Python worker at large SF — an OOM-killed worker);
-    # at candidate grain the same number proxies kernel WORK per
-    # partition (rows × slots).  Buckets outnumber partitions 4× so hash
-    # collisions between buckets still spread evenly.
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_buckets = 4 * (
-        threshold_shuffle_partitions
-        if isinstance(threshold_shuffle_partitions, int)
-        else session_parts
-    )
+    # Arrow pass runs once.  ``n_parts`` is the EXACT partition count for
+    # that one shuffle, sized from estimated pair-grain rows: at pair
+    # grain that bounds per-worker pandas rows directly (the session
+    # one-per-core default puts multi-million-row frames in each Python
+    # worker at large SF — an OOM-killed worker); at candidate grain the
+    # same number proxies kernel WORK per partition (rows × slots).
+    # Buckets outnumber partitions 4× so hash collisions between buckets
+    # still spread evenly.
+    n_parts = partitions_from_pair_rows(est_rows, spark)
+    n_buckets = 4 * n_parts
 
-    def _materialized_thr(side_rows, thr_of):
-        if threshold_shuffle_partitions is not None:
-            # the conf must be in effect BEFORE .persist(): persist
-            # eagerly compiles and registers the physical plan with the
-            # CacheManager, baking the exchange's partition count in —
-            # confs set afterward never reach the cached shuffle.  The
-            # count is also EXACT, not an AQE ceiling: cached plans
-            # compile with AQE disabled
-            # (canChangeCachedPlanOutputPartitioning defaults false), so
-            # the number set here is what materializes.  The scoped
-            # mutation assumes the driver plans one query at a time,
-            # which holds for every caller in this repo.
-            with exact_shuffle_partitions(spark, threshold_shuffle_partitions):
-                thr = thr_of(side_rows).persist()
-                thr.count()
-        else:
-            thr = thr_of(side_rows).persist()
-            if materialize_thresholds:
-                # populate the cache NOW: a consumer plan with several
-                # branches (funnel ⋈ metrics) would otherwise schedule
-                # the Arrow pass concurrently per branch and race past
-                # the cold cache, paying the full threshold computation
-                # once per branch.
-                thr.count()
+    def _materialized(thr_plan):
+        # the conf must be in effect BEFORE .persist(): persist eagerly
+        # compiles and registers the physical plan with the CacheManager,
+        # baking the exchange's partition count in — confs set afterward
+        # never reach the cached shuffle.  The count is also EXACT, not an
+        # AQE ceiling: cached plans compile with AQE disabled
+        # (canChangeCachedPlanOutputPartitioning defaults false), so the
+        # number set here is what materializes.  The scoped mutation
+        # assumes the driver plans one query at a time, which holds for
+        # every caller in this repo.  The count populates the cache NOW: a
+        # consumer plan with several branches (funnel ⋈ metrics) would
+        # otherwise schedule the Arrow pass concurrently per branch and
+        # race past the cold cache, paying the full threshold computation
+        # once per branch.
+        with exact_shuffle_partitions(spark, n_parts):
+            thr = thr_plan.persist()
+            thr.count()
         return thr
 
     if candidate_grain:
@@ -758,10 +683,7 @@ def sweep_candidates_with_thresholds(
         fcols = [f"_f{i}" for i in range(len(feature_cols))]
         side_rows = (
             feat.filter(base_candidate_filter(warmup))
-            .withColumn(
-                "formation",
-                F.explode(F.filter(formation_arr, lambda x: x.isNotNull())),
-            )
+            .withColumn("formation", _formation_explode(formations))
             .select(
                 "formation", "symbol", "rn", *payload,
                 *[
@@ -840,19 +762,14 @@ def sweep_candidates_with_thresholds(
             pdf["thr_arr"] = pd.Series(la, dtype=pd.ArrowDtype(la.type))
             return pdf[out_cols]
 
-        def _thr_of(src):
-            return (
-                src.withColumn(
-                    "_bkt",
-                    F.pmod(F.hash("formation", "symbol"), F.lit(n_buckets)).cast(
-                        "int"
-                    ),
-                )
-                .groupBy("_bkt")
-                .applyInPandas(compute, thr_schema)
+        thr = _materialized(
+            side_rows.withColumn(
+                "_bkt",
+                F.pmod(F.hash("formation", "symbol"), F.lit(n_buckets)).cast("int"),
             )
-
-        thr = _materialized_thr(side_rows, _thr_of)
+            .groupBy("_bkt")
+            .applyInPandas(compute, thr_schema)
+        )
         # JVM-side decode: broadcast the pair table (with each
         # orientation's q-list and its slot indices), fan out ×pairs per
         # formation, read the pair's values out of the feature columns
@@ -935,10 +852,7 @@ def sweep_candidates_with_thresholds(
         )
         side_rows = (
             feat.filter(base_candidate_filter(warmup))
-            .withColumn(
-                "formation",
-                F.explode(F.filter(formation_arr, lambda x: x.isNotNull())),
-            )
+            .withColumn("formation", _formation_explode(formations))
             .withColumn(
                 "_vals", F.array(*[F.col(c).cast("double") for c in feature_cols])
             )
@@ -1032,19 +946,14 @@ def sweep_candidates_with_thresholds(
                 pdf[f"thr_b_{i}"] = outs_b[i]
             return pdf[out_cols]
 
-        def _thr_of(src):
-            return (
-                src.withColumn(
-                    "_bkt",
-                    F.pmod(F.hash("pair_id", "symbol"), F.lit(n_buckets)).cast(
-                        "int"
-                    ),
-                )
-                .groupBy("_bkt")
-                .applyInPandas(compute, thr_schema)
+        thr = _materialized(
+            side_rows.withColumn(
+                "_bkt",
+                F.pmod(F.hash("pair_id", "symbol"), F.lit(n_buckets)).cast("int"),
             )
-
-        thr = _materialized_thr(side_rows, _thr_of)
+            .groupBy("_bkt")
+            .applyInPandas(compute, thr_schema)
+        )
         # JVM-side decode: assemble each orientation's wide columns into
         # an array, slice off the pair's real q-count, zip with its
         # q-list (broadcast) and explode — the q1 × q2 fan-out the old
@@ -1118,49 +1027,6 @@ def sweep_candidates_with_thresholds(
         )
     )
     return out.select(*_CAND_COLUMNS, "f1_thr", "f2_thr")
-
-
-#: grid width at which the fused pair-grain path starts to win.  The
-#: original series-grain pivot design carried constant scaffolding (two
-#: decode joins + a pivot shuffle) that only amortized at width, so small
-#: grids routed layered; after the pair-grain rewrite the fused path has
-#: no pivot at all and measured faster at EVERY width (sf0.1 medians of
-#: 3: 44-config grid 2.9 s fused vs 8.1 s layered; 1,008-config 2.5 s vs
-#: 6.5 s) — 0 routes everything fused except same-feature grids, which
-#: the fused path rejects and only the layered shape can express
-SWEEP_FUSED_MIN_CONFIGS = 0
-
-
-def sweep_candidates_auto(
-    feat: DataFrame,
-    spark: SparkSession,
-    grid: list[SweepConfig],
-    feature_cols: list[str],
-    warmup: int,
-    lookback: int = SIGNALSET_LOOKBACK,
-    **fused_kwargs,
-) -> DataFrame:
-    """Candidate-with-threshold relation, routed by grid width: wide grids
-    take the fused pair-grain path (:func:`sweep_candidates_with_thresholds`),
-    small grids — and any grid with same-feature configs, which the fused
-    path rejects — take the layered reference shape.  Both produce
-    identical rows (equivalence pinned in tests/test_sweep.py)."""
-    if len(grid) >= SWEEP_FUSED_MIN_CONFIGS and not any(
-        c.feature1 == c.feature2 for c in grid
-    ):
-        return sweep_candidates_with_thresholds(
-            feat, spark, grid, feature_cols, warmup, lookback, **fused_kwargs
-        )
-    return with_signalset_quantiles(
-        sweep_candidates(
-            feat,
-            sweep_grid_to_spark(spark, grid),
-            feature_cols,
-            warmup,
-            formations=grid_formations(grid),
-        ),
-        lookback,
-    )
 
 
 def _passes(val: str, direction: str, thr: str) -> F.Column:

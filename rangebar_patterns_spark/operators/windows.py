@@ -57,10 +57,10 @@ def with_bar_features(
     ).otherwise((F.col("open") - F.col("low")) / hl)
 
     if quantile_engine == "stream":
-        from ..functions.series_quantile import with_series_excl_quantile
+        from ..functions.series_quantile import with_series_excl_quantiles
 
-        df = with_series_excl_quantile(
-            df, "trade_intensity", p, "ti_p95_prior", lookback=rolling_window
+        df = with_series_excl_quantiles(
+            df, {"ti_p95_prior": ("trade_intensity", p)}, lookback=rolling_window
         )
         thresh = F.col("ti_p95_prior")
     else:

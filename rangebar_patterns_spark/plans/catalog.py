@@ -630,7 +630,6 @@ from ..config import gen600_profiles  # noqa: E402
 from ..operators.sweep import (  # noqa: E402
     default_sweep_grid,
     grid_formations,
-    sweep_candidates_auto,
     sweep_candidates_with_thresholds,
     sweep_funnel,
     sweep_grid_to_spark,
@@ -653,12 +652,10 @@ def _sweep_candq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _featg = bar features (rolling ti) + the 5 non-ti gate
     # thresholds — the exhaustion/high-volume/VWAP formations in the
     # 22-template sweep read them; shared+persisted with
-    # formation_counts and the short-barrier entries.  Routed via
-    # sweep_candidates_auto: since the pair-grain rewrite the fused
-    # path wins at every width, so only same-feature grids fall back
-    # to the layered shape (both produce identical rows, pinned in
-    # tests/test_sweep.py)
-    return sweep_candidates_auto(
+    # formation_counts and the short-barrier entries.  The fused path
+    # is the one threshold path (rows pinned against the layered test
+    # reference in tests/test_sweep.py)
+    return sweep_candidates_with_thresholds(
         _featg(spark, sf_dir), spark, default_sweep_grid(), SWEEP_FEATURES, WARMUP
     ).persist()
 
@@ -771,7 +768,7 @@ def _fullgrid_candq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode + broadcast decode for the funnel and signal
     # consumers.  The threshold
     # shuffle's exact partition count is derived from estimated
-    # side-relation rows (sweep.derive_threshold_partitions) — the
+    # side-relation rows (sweep.estimate_pair_rows) — the
     # same sizing at any SF, no host-tuned constants.
     return sweep_candidates_with_thresholds(
         with_cross_features(_featg(spark, sf_dir)),
@@ -779,8 +776,6 @@ def _fullgrid_candq(spark: SparkSession, sf_dir: str) -> DataFrame:
         gen600_full_grid(GEN600_FULL_BAR_FEATURES),
         _FULLGRID_FEATURES,
         WARMUP,
-        materialize_thresholds=True,
-        threshold_shuffle_partitions="auto",
     )
 
 
@@ -881,7 +876,8 @@ def q_sweep_gen600_complete_matrix(spark: SparkSession, sf_dir: str) -> DataFram
     (the pair-grain threshold shuffle and the funnel aggregate over its
     exploded output) is compiled under one derived exact partition count
     and materialized inside that scope, so no stage holds
-    multi-million-row partitions at any SF."""
+    multi-million-row partitions at any SF.  The inner threshold pass
+    derives the same count (the scope's session value is its floor)."""
     bar9 = GEN600_BAR9_FEATURES
     grid = gen600_full_grid(bar9)
     featx = with_cross_features(_featg(spark, sf_dir))
@@ -889,9 +885,7 @@ def q_sweep_gen600_complete_matrix(spark: SparkSession, sf_dir: str) -> DataFram
     n = derive_grid_shuffle_partitions(featx, spark, grid, WARMUP)
     with exact_shuffle_partitions(spark, n):
         candq = sweep_candidates_with_thresholds(
-            featx, spark, grid, features, WARMUP,
-            materialize_thresholds=True,
-            threshold_shuffle_partitions=n,
+            featx, spark, grid, features, WARMUP
         )
         out = sweep_funnel(candq).persist()
         out.count()  # materialize while the sizing conf is in effect

@@ -282,3 +282,27 @@ def test_side_cache_builds_once_per_session_dir_and_args(spark):
     assert _probe(s1, "a") is not first[0]
     assert len(builds) == len(calls) + 1
     cat._SIDE_CACHE.pop(("_probe", s1, "a"))
+
+
+def test_sweep_entries_run_the_one_fused_threshold_path(spark):
+    """The catalog's sweep entries all take the fused threshold path: each
+    executed plan carries the fused kernel's ``pair_id`` key and never the
+    layered reference's ``partner`` key, and no plans module names the
+    layered reference at all (it exists for tests only)."""
+    import pathlib
+
+    import rangebar_patterns_spark.plans as plans_pkg
+    from rangebar_patterns_spark.plans.catalog import QUERIES
+
+    for name in ("sweep_panel", "sweep_gen500_1008cfg", "sweep_gen600_fullgrid"):
+        plan = QUERIES[name](spark, SF_DIR)._jdf.queryExecution().executedPlan()
+        text = plan.toString()
+        assert "pair_id" in text, name
+        assert "partner" not in text, name
+    root = pathlib.Path(plans_pkg.__file__).parent
+    callers = [
+        p.name
+        for p in root.rglob("*.py")
+        if "with_signalset_quantiles" in p.read_text()
+    ]
+    assert not callers, callers

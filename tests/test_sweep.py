@@ -26,10 +26,8 @@ def test_sweep_scan_count_independent_of_config_count(spark):
     linearly with the grid.)"""
     from rangebar_patterns_spark.operators.sweep import (
         default_sweep_grid,
-        sweep_candidates,
+        sweep_candidates_with_thresholds,
         sweep_funnel,
-        sweep_grid_to_spark,
-        with_signalset_quantiles,
     )
     from rangebar_patterns_spark.operators.windows import (
         with_bar_features,
@@ -44,10 +42,11 @@ def test_sweep_scan_count_independent_of_config_count(spark):
                 bars_from_events(spark, SF_DIR), rolling_window=SWEEP_ROLLING
             )
         )
-        cand = sweep_candidates(
-            feat, sweep_grid_to_spark(spark, grid), SWEEP_FEATURES, WARMUP
+        df = sweep_funnel(
+            sweep_candidates_with_thresholds(
+                feat, spark, grid, SWEEP_FEATURES, WARMUP
+            )
         )
-        df = sweep_funnel(with_signalset_quantiles(cand))
         plan = df._jdf.queryExecution().executedPlan().toString()
         return plan.count("FileScan parquet") + plan.count("InMemoryTableScan")
 
@@ -58,11 +57,10 @@ def test_sweep_scan_count_independent_of_config_count(spark):
     big = small + [dataclasses.replace(c, q1=0.51) for c in small]
     ns, nb = n_scans(small), n_scans(big)
     assert ns == nb, f"scan count grew with configs: {ns} -> {nb}"
-    # the absolute count in this deliberately-unpersisted plan is a plan
-    # artifact (the threshold join branches re-derive the candidate
-    # subtree; the catalog persists that relation, collapsing them to one
-    # materialization) — what must never happen is scans scaling with the
-    # config grid, asserted above
+    # the absolute count is a plan artifact (the cached threshold
+    # relation renders its own scan inside the InMemoryTableScan) — what
+    # must never happen is scans scaling with the config grid, asserted
+    # above
     assert ns > 0
 
 
@@ -127,10 +125,10 @@ def test_feature_quantile_trap_partner_nulls(spark):
 
 
 def test_multi_q_sharing_guard_compares_values(spark):
-    """The multi-q pass reuses the first q-subrun's series for every q of
-    a (formation, feature, partner, symbol) run only when the subruns
-    match exactly — rn AND values.  Two q's that share rn but carry
-    different f1_val must each get thresholds over their own values."""
+    """Two q's of one (formation, feature, partner, symbol) key that share
+    rn but carry different f1_val must each get thresholds over their own
+    values: the layered reference streams every q-run on its own (it once
+    shared one series across a key's q's behind an rn/value guard)."""
     import numpy as np
 
     from rangebar_patterns_spark.functions.series_quantile import (
@@ -336,7 +334,7 @@ def test_gen600_complete_reference_matrix_runs(spark):
     features = sorted({*bar9, *CROSS_FEATURES})
     candq = sweep_candidates_with_thresholds(
         with_cross_features(_featg(spark, SF_DIR)), spark, grid, features,
-        WARMUP, materialize_thresholds=True,
+        WARMUP,
     )
     pdf = sweep_funnel(candq).toPandas()
     assert len(pdf) > 0
@@ -345,28 +343,27 @@ def test_gen600_complete_reference_matrix_runs(spark):
     assert pdf.config_id.nunique() > 10_000
 
 
-def test_threshold_shuffle_ceiling_reaches_cached_plan(spark):
-    """The threshold_shuffle_partitions ceiling must be in effect when
-    the threshold relation's plan is compiled: ``persist()`` registers
-    the physical plan eagerly, so confs set after it never reach the
-    cached shuffle (a silent no-op that reintroduces the sf1 OOM this
-    lever exists to prevent).  Assert the requested count appears on the
-    pair-key exchange inside the cached plan."""
+def test_threshold_shuffle_ceiling_reaches_cached_plan(spark, monkeypatch):
+    """The derived threshold-shuffle count must be in effect when the
+    threshold relation's plan is compiled: ``persist()`` registers the
+    physical plan eagerly, so confs set after it never reach the cached
+    shuffle (a silent no-op that reintroduces the sf1 OOM the sizing
+    exists to prevent).  One row per partition with a ceiling of 7 forces
+    the derived count to 7; assert it appears on the pair-key exchange
+    inside the cached plan."""
     import re
 
-    from rangebar_patterns_spark.operators.sweep import (
-        default_sweep_grid,
-        sweep_candidates_with_thresholds,
-    )
+    from rangebar_patterns_spark.operators import sweep as SW
     from rangebar_patterns_spark.plans import catalog as C
 
-    candq = sweep_candidates_with_thresholds(
+    monkeypatch.setattr(SW, "THRESHOLD_ROWS_PER_PARTITION", 1)
+    monkeypatch.setattr(SW, "THRESHOLD_MAX_PARTITIONS", 7)
+    candq = SW.sweep_candidates_with_thresholds(
         C._featg(spark, SF_DIR),
         spark,
-        default_sweep_grid(),
+        SW.default_sweep_grid(),
         C.SWEEP_FEATURES,
         C.WARMUP,
-        threshold_shuffle_partitions=7,
     )
     plan = candq._jdf.queryExecution().executedPlan().toString()
     hits = set(re.findall(r"hashpartitioning\(_bkt[^)]*, (\d+)\)", plan))
@@ -374,38 +371,30 @@ def test_threshold_shuffle_ceiling_reaches_cached_plan(spark):
     # and the scoped conf mutation must have been restored
     assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
 
-def test_auto_route_layered_for_same_feature_grids(spark):
-    """sweep_candidates_auto must route same-feature configs (feature1 ==
-    feature2, a shape the fused pair-grain path rejects with ValueError)
-    through the layered path regardless of grid width — wide grids that
-    contain even one such config cannot take the fused path."""
+
+def test_fused_path_rejects_same_feature_configs(spark):
+    """The fused path keys series orientation by feature < partner, so a
+    same-feature config (feature1 == feature2) would silently vanish from
+    its output.  It must refuse the grid instead, naming the config."""
+    import pytest
+
     from rangebar_patterns_spark.operators.sweep import (
-        SWEEP_FUSED_MIN_CONFIGS,
         SweepConfig,
         default_sweep_grid,
-        sweep_candidates_auto,
+        sweep_candidates_with_thresholds,
     )
     from rangebar_patterns_spark.plans import catalog as C
 
     base = default_sweep_grid()
-    # widen past the fused threshold by tiling quantile variants, then
-    # poison with one same-feature config
-    wide = [
-        SweepConfig(**{**c.__dict__, "q1": round(0.50 + 0.01 * k, 2)})
-        for k in range(1 + SWEEP_FUSED_MIN_CONFIGS // len(base))
-        for c in base
-    ]
-    assert len(wide) >= SWEEP_FUSED_MIN_CONFIGS
     poison = SweepConfig(
-        **{**wide[0].__dict__, "feature2": wide[0].feature1, "q2": 0.5}
+        **{**base[0].__dict__, "feature2": base[0].feature1, "q2": 0.5}
     )
-    feat = C._featg(spark, SF_DIR)
-    out = sweep_candidates_auto(
-        feat, spark, wide + [poison], C.SWEEP_FEATURES, C.WARMUP
-    )
-    # layered path output: must plan without raising and carry the
-    # threshold columns both paths share
-    assert {"f1_thr", "f2_thr"} <= set(out.columns)
+    with pytest.raises(ValueError, match=poison.config_id):
+        sweep_candidates_with_thresholds(
+            C._featg(spark, SF_DIR), spark, base + [poison],
+            C.SWEEP_FEATURES, C.WARMUP,
+        )
+
 
 def test_fused_mixed_q_width_padding(spark):
     """Pairs in one grid may need different q-counts per orientation; the
@@ -454,7 +443,7 @@ def test_fused_mixed_q_width_padding(spark):
     pd.testing.assert_frame_equal(lp, fp)
 
 
-def test_derive_threshold_partitions_scales_with_fanout(spark):
+def test_threshold_partitions_scale_with_fanout(spark):
     """The threshold-shuffle sizing must be (a) clamped below by the
     session shuffle-partition count, (b) monotone in the grid's pair
     fan-out, (c) capped at THRESHOLD_MAX_PARTITIONS — so no caller at any
@@ -463,12 +452,11 @@ def test_derive_threshold_partitions_scales_with_fanout(spark):
         THRESHOLD_MAX_PARTITIONS,
         default_sweep_grid,
         derive_grid_shuffle_partitions,
-        derive_threshold_partitions,
+        estimate_pair_rows,
         grid_formations,
+        partitions_from_pair_rows,
     )
-    from rangebar_patterns_spark.operators.signals import FORMATIONS
     from rangebar_patterns_spark.plans.catalog import WARMUP, _featg
-    import pyspark.sql.functions as F
 
     feat = _featg(spark, SF_DIR)
     grid = default_sweep_grid()
@@ -480,17 +468,16 @@ def test_derive_threshold_partitions_scales_with_fanout(spark):
     assert n_small == session_default
 
     formations = grid_formations(grid)
-    formation_arr = F.array(
-        *[F.when(FORMATIONS[name].signal(), F.lit(name)) for name in formations]
-    )
     # same candidate counts, thousandfold fan-out: must grow, stay capped
     big = {f: 5_000 for f in formations}
-    n_big = derive_threshold_partitions(feat, spark, WARMUP, formation_arr, big)
+    n_big = partitions_from_pair_rows(estimate_pair_rows(feat, WARMUP, big), spark)
     assert n_big > n_small
     assert n_big <= THRESHOLD_MAX_PARTITIONS
 
     huge = {f: 10_000_000 for f in formations}
-    n_huge = derive_threshold_partitions(feat, spark, WARMUP, formation_arr, huge)
+    n_huge = partitions_from_pair_rows(
+        estimate_pair_rows(feat, WARMUP, huge), spark
+    )
     assert n_huge == THRESHOLD_MAX_PARTITIONS
 
 

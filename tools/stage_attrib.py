@@ -3,7 +3,10 @@
 cold plan caches at $SPARK_GRAFT_CPUS, then pull per-stage metrics from
 the local UI REST API to separate task-scheduling overhead (many tiny
 tasks, run time << wall) from a real serialization point (few tasks, one
-long stage).
+long stage).  Entries are looked up in the gate catalog, the restored
+bench-only entries and the demo grids (``BENCH_QUERIES``), so e.g.
+``python tools/stage_attrib.py sweep_gen600_complete_matrix`` attributes
+the complete-matrix demo.
 
 Usage: python tools/stage_attrib.py <entry>[,<entry>...] [sf_dir] [passes]
 """
@@ -39,7 +42,8 @@ def main() -> None:
     base = f"{ui}/api/v1/applications/{spark.sparkContext.applicationId}"
 
     qs = dict(C.QUERIES)
-    qs.update(getattr(C, "RESTORED_QUERIES", {}))
+    qs.update(C.RESTORED_QUERIES)
+    qs.update(C.BENCH_QUERIES)
 
     for entry in ENTRIES:
         fn = qs[entry]
@@ -49,6 +53,7 @@ def main() -> None:
                 s["stageId"]
                 for s in fetch(f"{base}/stages?status=complete")
             }
+            seen_jobs = {j["jobId"] for j in fetch(f"{base}/jobs")}
             spark.sparkContext.setJobDescription(f"attrib:{entry}:{p}")
             t0 = time.perf_counter()
             n = fn(spark, SF_DIR).count()
@@ -58,12 +63,15 @@ def main() -> None:
                 for s in fetch(f"{base}/stages?status=complete")
                 if s["stageId"] not in seen
             ]
+            jobs = [
+                j for j in fetch(f"{base}/jobs") if j["jobId"] not in seen_jobs
+            ]
             run_s = sum(s["executorRunTime"] for s in stages) / 1000
             cpu_s = sum(s["executorCpuTime"] for s in stages) / 1e9
             tasks = sum(s["numTasks"] for s in stages)
             print(
                 f"\n=== {entry} pass {p + 1}: wall {wall:.2f}s, {n} rows, "
-                f"{len(stages)} stages, {tasks} tasks, "
+                f"{len(jobs)} jobs, {len(stages)} stages, {tasks} tasks, "
                 f"task-run {run_s:.2f}s (cpu {cpu_s:.2f}s), "
                 f"run/wall {run_s / wall:.2f} ===",
                 flush=True,
