@@ -28,11 +28,10 @@ DuckDB); list folds are sequential in both engines, so results are exact.
 
 from __future__ import annotations
 
-import os
 import warnings
 
 from py4j.protocol import Py4JError
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 SHINGLE_N = 3
@@ -110,9 +109,7 @@ def exact_duplicates(docs: DataFrame) -> DataFrame:
 #: sf1 bench tier the derived width already reaches session parallelism
 #: (911 KB / 24 KB > 32), so the r12 sf1 wins are untouched; at 100 TB the
 #: scan is wider than the session and the whole function is a no-op.
-SPREAD_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_BYTES_PER_TASK", 24576)
-)
+SPREAD_BYTES_PER_TASK = 24576
 
 
 def spread_narrow_scan(docs: DataFrame, key: str = "doc_id") -> DataFrame:
@@ -798,7 +795,6 @@ def duplicate_clusters(
     pairs: DataFrame,
     max_iter: int = 20,
     num_partitions: int | None = None,
-    stats_out: dict | None = None,
 ) -> DataFrame:
     """Connected components over a near-dup pair relation — the dedup
     pipeline's resolution step (pairs → clusters → one surviving
@@ -855,9 +851,7 @@ def duplicate_clusters(
         .localCheckpoint()
     )
     changed = 1
-    rounds = 0
     for _ in range(max_iter):
-        rounds += 1
         nbr_min = (
             edges.join(labels, edges.dst == labels.doc_id)
             .groupBy("src")
@@ -895,155 +889,22 @@ def duplicate_clusters(
         labels = new_labels
         if changed == 0:
             break
+    # every round's labels are checkpointed, so the returned plan never
+    # reads the edges
+    edges.unpersist()
     if changed != 0:
         raise RuntimeError(
             f"duplicate_clusters did not converge in {max_iter} rounds — "
             "a component's diameter exceeds 2^max_iter; raise max_iter"
         )
-    if stats_out is not None:
-        # the propagation path joins the FULL (fixed-size) edge relation
-        # every round — record that for the scaling comparison
-        stats_out.update(
-            rounds=rounds, edge_rows_per_round=[edges.count()] * rounds
-        )
-    return _cluster_output(labels.select("doc_id", F.col("label").alias("cluster_rep")))
-
-
-def _cluster_output(labeled: DataFrame) -> DataFrame:
-    """(doc_id, cluster_rep) → the shared output shape: rep flag +
-    cluster size (one window over the small labeled relation)."""
-    from pyspark.sql import Window
-
+    # rep flag + cluster size: one window over the small labeled relation
     w = Window.partitionBy("cluster_rep")
     return (
-        labeled.withColumn("cluster_size", F.count("*").over(w).cast("long"))
+        labels.select("doc_id", F.col("label").alias("cluster_rep"))
+        .withColumn("cluster_size", F.count("*").over(w).cast("long"))
         .withColumn("is_rep", F.col("doc_id") == F.col("cluster_rep"))
         .select("doc_id", "cluster_rep", "is_rep", "cluster_size")
     )
-
-
-def duplicate_clusters_star(
-    pairs: DataFrame,
-    max_iter: int = 20,
-    num_partitions: int | None = None,
-    stats_out: dict | None = None,
-) -> DataFrame:
-    """Connected components by alternating large-star/small-star
-    contraction (the two-phase MapReduce CC algorithm) — same output as
-    :func:`duplicate_clusters`, different scaling shape: where min-label
-    propagation joins the FULL edge relation every round, star
-    contraction rewrites the edge set itself each round, collapsing it
-    toward one star per component — the rounds get *cheaper* as they
-    proceed, the property that matters at 10⁹-edge corpora.
-
-    One round = large-star (every node connects its strictly-larger
-    neighbors to the minimum of its closed neighborhood) then small-star
-    (connects the smaller-or-equal neighbors, and itself, to that
-    minimum).  Both emit canonical (hi → lo) edges, so each round is two
-    groupBy-min + join passes over a shrinking relation.  Converged when
-    a full round leaves the canonical edge set unchanged — the edges then
-    form stars whose centers are the component minima, and labels are
-    read straight off the edges (no propagation state to carry).
-
-    Deterministic (min is order-insensitive); fuzz-tested against the
-    same union-find reference as the propagation path.  Raises
-    ``RuntimeError`` on non-convergence within ``max_iter`` rounds."""
-    canon = (
-        pairs.select(
-            F.greatest("doc_a", "doc_b").alias("u"),
-            F.least("doc_a", "doc_b").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
-    if num_partitions is None:
-        num_partitions = max(1, min(256, canon.count() // 500_000 + 1))
-    edges = canon.repartition(num_partitions, "u").persist()
-    edges.count()
-    # all docs ever seen — the star rounds drop singleton-star members
-    # from the edge relation only at the very end, but output must cover
-    # every doc that appeared in a pair
-    docs = (
-        edges.select(F.col("u").alias("doc_id"))
-        .unionByName(edges.select(F.col("v").alias("doc_id")))
-        .distinct()
-        .persist()
-    )
-    canon.unpersist()
-
-    def _sym(e: DataFrame) -> DataFrame:
-        return e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
-            e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
-
-    def _mins(sym: DataFrame) -> DataFrame:
-        return (
-            sym.groupBy("src")
-            .agg(F.min("dst").alias("mn"))
-            .select("src", F.least("src", "mn").alias("m"))
-        )
-
-    def _large_star(e: DataFrame) -> DataFrame:
-        sym = _sym(e)
-        joined = sym.join(_mins(sym), "src")
-        return (
-            joined.filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def _small_star(e: DataFrame) -> DataFrame:
-        sym = _sym(e)
-        mins = _mins(sym)
-        joined = sym.join(mins, "src")
-        return (
-            joined.filter(F.col("dst") <= F.col("src"))
-            .select(F.col("dst").alias("u"), F.col("m").alias("v"))
-            .unionByName(mins.select(F.col("src").alias("u"), F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    converged = False
-    round_edges: list[int] = []
-    for _ in range(max_iter):
-        round_edges.append(edges.count())
-        # materialize the large-star output before small-star: small-star
-        # consumes it on BOTH sides of its min-join, and Catalyst does not
-        # dedupe common subplans across join branches — unmaterialized,
-        # the whole large-star subtree executes twice per round
-        large = _large_star(edges).localCheckpoint()
-        new_edges = (
-            _small_star(large)
-            .repartition(num_partitions, "u")
-            .localCheckpoint()
-        )
-        # set equality on canonical edges: same count + empty anti-join
-        same_count = new_edges.count() == edges.count()
-        if same_count and new_edges.join(edges, ["u", "v"], "left_anti").limit(1).count() == 0:
-            converged = True
-            edges = new_edges
-            break
-        edges = new_edges
-    if not converged:
-        raise RuntimeError(
-            f"duplicate_clusters_star did not converge in {max_iter} rounds; "
-            "raise max_iter"
-        )
-    if stats_out is not None:
-        stats_out.update(rounds=len(round_edges), edge_rows_per_round=round_edges)
-    # converged edges are stars: (member → component-min); roots appear
-    # only as v — label them with themselves via the doc universe
-    labels = docs.join(
-        edges.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_rep")),
-        "doc_id",
-        "left",
-    ).select(
-        "doc_id", F.coalesce("cluster_rep", "doc_id").alias("cluster_rep")
-    )
-    return _cluster_output(labels)
 
 
 #: SemDeDup quantizer sizing: target ~200 vectors per learned cell, so the

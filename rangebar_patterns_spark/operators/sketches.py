@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import hold
 from .dedup import hexint, shingles_col, spread_narrow_scan, words_col
 
 #: KMV keeps the K smallest distinct hashes per group; the estimator is
@@ -266,26 +267,6 @@ def _sketch_metrics(
     )
 
 
-#: last persisted distinct-hash relation (len <= 1) — see the swap-handle
-#: comment in distinct_sketch_panel
-_HS_LAST: list[DataFrame] = []
-
-
-def _drop_hs_last() -> None:
-    """Unpersist and forget the held hash relation.  The unpersist is
-    best-effort (round-12 ADVICE): the handle may belong to a
-    SparkSession that has since been stopped, in which case the JVM call
-    raises — the stale handle must still be dropped so a fresh session's
-    distinct_sketch_panel call starts clean (forfeiting a dead session's
-    cache costs nothing)."""
-    if _HS_LAST:
-        stale = _HS_LAST.pop()
-        try:
-            stale.unpersist(blocking=False)
-        except Exception:
-            pass
-
-
 def distinct_sketch_panel(docs: DataFrame) -> DataFrame:
     """The certified panel: one row per (source, item) plus the merged
     ``__all__`` rows per item.  Per-source rows sketch that source's
@@ -311,19 +292,11 @@ def distinct_sketch_panel(docs: DataFrame) -> DataFrame:
     # ``occ`` aggregate re-evaluated the whole items subtree just to
     # count occurrences (guide §1.2: don't compute things twice); both
     # n_items and exact_distinct now fall out of this one relation.
-    # Swap-handle discipline (round-11 ADVICE): each call unpersists the
-    # PREVIOUS call's relation, so repeated library/test invocations hold
-    # at most one cached copy instead of accumulating until clearCache
-    # (recompute stays correct either way — unpersist only forfeits the
-    # cache).
-    hs = (
+    hs = hold(
         items.select("source", "item", hexint(F.col("v")).alias("h"))
         .groupBy("source", "item", "h")
         .agg(F.count("*").cast("long").alias("_c"))
-        .persist()
     )
-    _drop_hs_last()
-    _HS_LAST.append(hs)
     exact = hs.groupBy("source", "item").agg(
         F.count("*").cast("long").alias("exact_distinct"),
         F.sum("_c").cast("long").alias("n_items"),

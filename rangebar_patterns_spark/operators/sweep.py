@@ -57,6 +57,7 @@ from ..functions.series_quantile import (
     excl_quantile_stream,
     excl_quantile_stream_multi,
 )
+from ..session import hold
 from .signals import FORMATIONS, base_eligibility
 
 #: W7 rolling window over the candidate sequence (gen600: 999 PRECEDING .. 1 PRECEDING)
@@ -355,7 +356,7 @@ def with_signalset_quantiles(
     # (formation, feature, q, partner) candidate)
     spark = cand.sparkSession
     n_buckets = 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
-    thr = (
+    thr = hold(
         thr_input.withColumn(
             "_bkt",
             F.pmod(
@@ -365,7 +366,6 @@ def with_signalset_quantiles(
         )
         .groupBy("_bkt")
         .applyInPandas(compute, thr_schema)
-        .persist()
     )
     out = cand.join(
         thr.withColumnsRenamed(
@@ -632,7 +632,7 @@ def sweep_candidates_with_thresholds(
         # race past the cold cache, paying the full threshold computation
         # once per branch.
         with exact_shuffle_partitions(spark, n_parts):
-            thr = thr_plan.persist()
+            thr = hold(thr_plan)
             thr.count()
         return thr
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import hold
 from .dedup import HASH_MOD, SHINGLE_N, shingles_col, words_col
 
 #: BPE-ish tokenization: word runs or single non-space symbols
@@ -734,7 +735,7 @@ def benchmark_overlap_bloom(
     # tiny at any scale (the eval split), so persist the distinct shingle
     # relation once and let every component read the cache, and fuse the
     # per-part/merged word aggregates into ONE grouping-sets pass below.
-    bench_sh = (
+    bench_sh = hold(
         benchmark.select(
             F.concat(F.lit("doc:"), F.col("doc_id").cast("string")).alias(
                 "part"
@@ -746,9 +747,8 @@ def benchmark_overlap_bloom(
         )
         .select("part", hexint(F.col("s")).alias("shingle"))
         .distinct()
-        .persist()
     )
-    bench_global = bench_sh.select("shingle").distinct().persist()
+    bench_global = hold(bench_sh.select("shingle").distinct())
     # filter geometry from the GLOBAL inserted count (partials must share
     # m for OR to be meaningful) — one scalar row, broadcast everywhere
     mrel = bench_global.agg(
@@ -825,7 +825,7 @@ def benchmark_overlap_bloom(
     # every partial + the merged row in one densify pass; the relation is
     # a handful of rows (one per bench doc + one), persisted because both
     # the filter-row union and the probe's broadcast read it
-    dense_all = densify(sparse).persist()
+    dense_all = hold(densify(sparse))
     dense_parts = dense_all.filter(F.col("part") != "__merged__")
     dense_merged = dense_all.filter(F.col("part") == "__merged__")
     n_ins_part = bench_sh.groupBy("part").agg(

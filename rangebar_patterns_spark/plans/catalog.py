@@ -23,6 +23,7 @@ from ..operators.signals import (
 )
 from ..operators.windows import bar_window, with_bar_features, with_gate_quantiles
 from ..sources.bars import BAR_COLUMNS, BARS_DUCKDB_CTE, bars_from_events
+from ..session import hold, release
 from . import fragments as frag
 from ..functions import detsum as _det
 
@@ -79,12 +80,13 @@ def _side_cached(f):
 
 
 def reset_plan_caches(spark: SparkSession) -> None:
-    """Drop every side cache and clear Spark's cache — the one release
-    path.  bench.py calls this between repeat passes so each pass pays the
-    full cold-cache cost (otherwise pass 2+ would measure warm side-caches,
-    not the workload)."""
+    """Drop every side cache and release every held persist of ``spark``
+    — the one release path.  bench.py calls this between repeat passes so
+    each pass pays the full cold-cache cost (otherwise pass 2+ would
+    measure warm side-caches, not the workload).  Frames the caller
+    cached itself stay cached."""
     _SIDE_CACHE.clear()
-    spark.catalog.clearCache()
+    release(spark)
 
 
 @_side_cached
@@ -92,7 +94,7 @@ def _bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """~every catalog query starts from the bars adapter; persisted so the
     events scan + synthetic-feature stack isn't re-executed per query (at
     cluster scale this is "read the bar table once per job")."""
-    return bars_from_events(spark, sf_dir).persist()
+    return hold(bars_from_events(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -222,7 +224,7 @@ def _featg(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds — the shared input of every all-formation query.  Persisted:
     the gate-quantile Arrow pass is the expensive step."""
     feat = with_bar_features(_bars(spark, sf_dir), rolling_window=GEN600_ROLLING)
-    return with_gate_quantiles(feat).persist()
+    return hold(with_gate_quantiles(feat))
 
 
 def _featg_ctes() -> str:
@@ -655,9 +657,9 @@ def _sweep_candq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # formation_counts and the short-barrier entries.  The fused path
     # is the one threshold path (rows pinned against the layered test
     # reference in tests/test_sweep.py)
-    return sweep_candidates_with_thresholds(
+    return hold(sweep_candidates_with_thresholds(
         _featg(spark, sf_dir), spark, default_sweep_grid(), SWEEP_FEATURES, WARMUP
-    ).persist()
+    ))
 
 
 def _materialize(sql: str, *ctes: str) -> str:
@@ -887,7 +889,7 @@ def q_sweep_gen600_complete_matrix(spark: SparkSession, sf_dir: str) -> DataFram
         candq = sweep_candidates_with_thresholds(
             featx, spark, grid, features, WARMUP
         )
-        out = sweep_funnel(candq).persist()
+        out = hold(sweep_funnel(candq))
         out.count()  # materialize while the sizing conf is in effect
     return out
 
@@ -915,7 +917,7 @@ def _champion_trades(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation; persisted so the bars scan + window stack + barrier sim run
     once, not ten times (the driver and bench.py both call queries
     sequentially in one session)."""
-    return _trades_df(spark, sf_dir, gen720_grid(), champion_signal()).persist()
+    return hold(_trades_df(spark, sf_dir, gen720_grid(), champion_signal()))
 
 
 @_side_cached
@@ -966,7 +968,7 @@ def _eval_layer(spark: SparkSession, sf_dir: str, which: str) -> DataFrame:
     }.get(which, 1)
     est_rows = _n_symbols(spark, sf_dir) * len(gen720_grid()) * fan
     n_parts = max(1, min(32, est_rows // 5_000 + 1))
-    out = df.repartition(n_parts).persist()
+    out = hold(df.repartition(n_parts))
     out.count()  # materialize once
     return out
 
@@ -1467,7 +1469,7 @@ def _doc_arrs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for the eager arrs build, then drops.
     docs = load_table(spark, sf_dir, "documents")
     sh = DD._doc_shingles(docs).persist()
-    arrs = DD._shingle_arrays(docs, sh=sh).persist()
+    arrs = hold(DD._shingle_arrays(docs, sh=sh))
     arrs.count()  # eager: fold the postings into arrs NOW
     sh.unpersist()
     return arrs
@@ -1488,9 +1490,9 @@ def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash near-dup pair relation feeds both the pair entry and
     the cluster-resolution entry — persisted once."""
-    return DD.minhash_lsh_pairs(
+    return hold(DD.minhash_lsh_pairs(
         load_table(spark, sf_dir, "documents"), arrs=_doc_arrs(spark, sf_dir)
-    ).persist()
+    ))
 
 
 #: the normalized near-dup pair schema: every method-specific column is
@@ -2477,9 +2479,9 @@ def _logreg_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeps that single partition for every GD-step aggregate
     # (guide §2.5).  Gradients are order-free integer-scaled sums,
     # so partitioning cannot change any certified value.
-    return CLF.logreg_features(
+    return hold(CLF.logreg_features(
         DD.spread_narrow_scan(load_table(spark, sf_dir, "documents"))
-    ).persist()
+    ))
 
 
 @register("logreg_quality_scores", TO.logreg_scores_sql())

@@ -9,13 +9,28 @@ ANSI mode is deliberately OFF: the reference engine's semantics are
 permissive (ClickHouse ``nullIf`` guards everywhere, NULL on bad division),
 and every denominator in this codebase is explicitly ``nullif``-guarded, so
 we want NULL-propagation rather than task-killing exceptions at 100 TB.
+
+Cache lifetime: every persisted relation that outlives the function that
+built it goes through :func:`hold`, and :func:`release` (called by
+``catalog.reset_plan_caches``) is the one path that unpersists them.
+Nothing drops Spark's whole cache, so a caller's own cached frames
+survive a reset.  A persist that its own function unpersists
+before it returns needs no hold; these are:
+
+- ``catalog._doc_arrs``: the ``sh`` posting relation, dropped once
+  ``arrs`` is counted;
+- ``dedup.duplicate_clusters``: ``pre_edges`` (dropped once ``edges`` is
+  counted) and ``edges`` (dropped once the labels converge);
+- ``similarity.pq_train``: ``sv``;
+- ``similarity.kmeans_train``: ``v``;
+- ``classifier.logreg_score``: ``raw`` when the caller passed none.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 #: minimum free bytes on /dev/shm before it is used as shuffle scratch —
@@ -35,6 +50,23 @@ def _local_scratch_dir() -> str:
         except OSError:
             pass
     return "/tmp"
+
+
+#: driver heap ceiling when ``SPARK_DRIVER_MEMORY`` is unset
+_DRIVER_MEMORY_CAP_MIB = 48 * 1024
+
+
+def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Default ``spark.driver.memory``: half the host's MemTotal, capped
+    at 48 GiB — the JVM grows its heap toward this ceiling, and a ceiling
+    above physical RAM gets the driver killed mid-run.  48 GiB when the
+    host's memory cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            kib = next(int(l.split()[1]) for l in fh if l.startswith("MemTotal:"))
+    except OSError:
+        return f"{_DRIVER_MEMORY_CAP_MIB}m"
+    return f"{min(_DRIVER_MEMORY_CAP_MIB, kib // 2 // 1024)}m"
 
 
 def get_spark(
@@ -65,7 +97,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         # shuffle/spill scratch on tmpfs when available: local-mode
         # shuffle writes otherwise contend with the host's virtio disk
         # (observed as D-state stalls with idle CPUs); on a real cluster
@@ -91,3 +126,30 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: persisted frames that outlive the function that built them, in hold
+#: order (every session's; see :func:`release`)
+_HELD: list[DataFrame] = []
+
+
+def hold(df: DataFrame) -> DataFrame:
+    """Persist ``df`` until the next :func:`release` of its session and
+    return it.  Lazy like ``persist``: the caller decides whether to
+    materialize now."""
+    df.persist()
+    _HELD.append(df)
+    return df
+
+
+def release(spark: SparkSession) -> None:
+    """Unpersist ``spark``'s held frames, newest first, and forget every
+    held frame.  Newest first because ``unpersist`` does not cascade:
+    uncaching a frame re-plans every cached, not yet materialized plan
+    that reads it, so the dependents should already be gone.  Frames of
+    any other session (one since stopped, say) are forgotten without a
+    JVM call."""
+    while _HELD:
+        df = _HELD.pop()
+        if df.sparkSession is spark:
+            df.unpersist()

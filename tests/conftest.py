@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import os
-
 import duckdb
 import pytest
 
@@ -13,12 +11,6 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    # get_spark's default 48 GB driver heap is larger than a 16 GB host's
-    # RAM: the JVM keeps growing its heap toward it across the suite (RSS
-    # 14.5 GB observed) until the kernel kills it and every later test
-    # fails.  The sf0.001 suite passes in a 6 GB heap (peak RSS 4.7 GB);
-    # an explicit SPARK_DRIVER_MEMORY still wins.
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
     spark = get_spark("tests", master="local[4]", shuffle_partitions=4)
     # Spark 4 converts toPandas() via Arrow by default; that native path
     # segfaults intermittently under the suite's sustained load (observed

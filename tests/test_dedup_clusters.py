@@ -1,23 +1,17 @@
 """duplicate_clusters unit vectors: multi-hop chains must converge to one
-component (the property the per-pair relation alone doesn't give you).
-Every case runs against BOTH implementations — min-label propagation
-(duplicate_clusters) and alternating large-star/small-star contraction
-(duplicate_clusters_star)."""
+component (the property the per-pair relation alone doesn't give you)."""
 
 from __future__ import annotations
 
 import pytest
 
 
-@pytest.fixture(params=["propagate", "star"])
+# the one param keeps the ``[propagate]`` test ids of the cases
+@pytest.fixture(params=["propagate"])
 def duplicate_clusters(request):
     from rangebar_patterns_spark.operators import dedup
 
-    return (
-        dedup.duplicate_clusters
-        if request.param == "propagate"
-        else dedup.duplicate_clusters_star
-    )
+    return dedup.duplicate_clusters
 
 
 def test_chain_and_island(spark, duplicate_clusters):

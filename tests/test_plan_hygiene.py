@@ -284,6 +284,84 @@ def test_side_cache_builds_once_per_session_dir_and_args(spark):
     cat._SIDE_CACHE.pop(("_probe", s1, "a"))
 
 
+def test_every_persist_is_held_or_released_in_place():
+    """Every ``.persist(`` in the package is either the one inside
+    ``session.hold`` or is assigned to a name that the same function
+    also ``.unpersist()``s.  A persist that outlives its function must
+    go through ``hold``, or ``reset_plan_caches`` cannot release it."""
+    import ast
+    import pathlib
+
+    import rangebar_patterns_spark as pkg
+
+    def method_calls(node, attr):
+        return [
+            n for n in ast.walk(node)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == attr
+        ]
+
+    root = pathlib.Path(pkg.__file__).parent
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+        for call in method_calls(tree, "persist"):
+            fn = parent[call]
+            while fn is not None and not isinstance(fn, ast.FunctionDef):
+                fn = parent.get(fn)
+            if fn is not None and (rel, fn.name) == ("session.py", "hold"):
+                continue
+            assign = parent[call]
+            target = (
+                assign.targets[0].id
+                if isinstance(assign, ast.Assign)
+                and len(assign.targets) == 1
+                and isinstance(assign.targets[0], ast.Name)
+                else None
+            )
+            released = fn is not None and any(
+                isinstance(c.func.value, ast.Name) and c.func.value.id == target
+                for c in method_calls(fn, "unpersist")
+            )
+            if not released:
+                bad.append(f"{rel}:{call.lineno}")
+    assert not bad, f"persists neither held nor released in place: {bad}"
+
+
+def test_reset_releases_only_the_packages_caches(spark):
+    """``reset_plan_caches`` unpersists what the package held and nothing
+    else: a frame the caller cached survives it, and is then the only
+    entry in Spark's cache.  The entries cover the sweep's threshold
+    relation, the decontamination panel's bench side, the distinct
+    sketch's hash relation, the CC edges and the eval layers."""
+    import rangebar_patterns_spark.plans.catalog as cat
+    from pyspark import StorageLevel
+
+    cat.reset_plan_caches(spark)
+    spark.catalog.clearCache()
+    cached = spark._jsparkSession.sharedState().cacheManager().cachedData
+    user = spark.range(100).selectExpr("id * 7 AS v").persist()
+    user.count()
+    for name in (
+        "sweep_gen500_1008cfg",
+        "decontamination_overlap",
+        "sketch_distinct",
+        "dedup_clusters",
+        "eval_tail_tamrs",
+    ):
+        cat.QUERIES[name](spark, SF_DIR).collect()
+    assert cached().size() > 1
+    cat.reset_plan_caches(spark)
+    try:
+        assert user.storageLevel != StorageLevel.NONE
+        assert cached().size() == 1
+    finally:
+        user.unpersist()
+
+
 def test_sweep_entries_run_the_one_fused_threshold_path(spark):
     """The catalog's sweep entries all take the fused threshold path: each
     executed plan carries the fused kernel's ``pair_id`` key and never the
