@@ -307,10 +307,6 @@ def f_2down() -> Column:
     return FORMATIONS["2down"].pattern()
 
 
-def f_3down() -> Column:
-    return FORMATIONS["3down"].pattern()
-
-
 def eligibility(warmup: int) -> Column:
     """Warmup/NULL eligibility gate applied before aggregation (P4):
     lag chain filled, no-lookahead threshold warmed up and positive,

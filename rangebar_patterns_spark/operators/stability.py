@@ -232,16 +232,3 @@ def vorob_stability(
         "hv_per_fold": hv,
         "hv_cv": (std / mean) if mean > 1e-12 else float("inf"),
     }
-
-
-def vorob_stability_df(objectives_df: DataFrame) -> dict:
-    """Convenience: run ``vorob_stability`` on a collected
-    ``fold_objectives`` result (all symbols/configs pooled per fold, the
-    reference's combo-level pooling)."""
-    rows = [
-        (r["fold"], r["omega"], r["rachev_ratio"], r["total_return"])
-        for r in objectives_df.select(
-            "fold", "omega", "rachev_ratio", "total_return"
-        ).collect()
-    ]
-    return vorob_stability(rows)

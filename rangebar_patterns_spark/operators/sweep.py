@@ -34,8 +34,6 @@ documents a 2.36 GB → 1.6 MB difference).
 
 from __future__ import annotations
 
-import threading
-from contextlib import contextmanager
 from dataclasses import dataclass
 from itertools import chain
 
@@ -396,43 +394,6 @@ THRESHOLD_ROWS_PER_PARTITION = 65_536
 THRESHOLD_MAX_PARTITIONS = 4_096
 
 
-#: guards exact_shuffle_partitions — the conf mutation is session-global,
-#: so two threads planning concurrently would compile each other's counts
-#: into their cached plans; non-blocking acquire turns that silent
-#: corruption into a loud error.  REENTRANT: one thread may nest scopes
-#: (the complete-matrix entry wraps its whole plan in one count and the
-#: inner threshold pass re-enters with the same) — nesting on a single
-#: thread is sequential and each scope restores its predecessor's value.
-_EXACT_PARTITIONS_LOCK = threading.RLock()
-
-
-@contextmanager
-def exact_shuffle_partitions(spark: SparkSession, n: int):
-    """Scoped ``spark.sql.shuffle.partitions`` mutation for plans that are
-    compiled-and-cached inside the scope (cached plans compile with AQE
-    off, so the count is exact).  The mutation is session-global: it
-    requires ONE query being planned at a time on the session — true for
-    this repo's driver/bench/test callers and now ENFORCED: concurrent
-    entry raises instead of silently cross-compiling counts (a per-plan
-    hint would be safe under concurrency; Spark has none for cached-plan
-    compilation as of 4.x)."""
-    if not _EXACT_PARTITIONS_LOCK.acquire(blocking=False):
-        raise RuntimeError(
-            "exact_shuffle_partitions entered concurrently: the session-"
-            "global shuffle-partition mutation would compile one plan's "
-            "count into another's cache — serialize sweep planning"
-        )
-    try:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    finally:
-        _EXACT_PARTITIONS_LOCK.release()
-
-
 def grid_pairs_per_formation(grid: list[SweepConfig]) -> dict[str, int]:
     """Distinct unordered feature-pair count per formation for a grid —
     the fan-out factor each candidate (bar, formation) row explodes by in
@@ -445,19 +406,6 @@ def grid_pairs_per_formation(grid: list[SweepConfig]) -> dict[str, int]:
     for f0, *_ in p_keys:
         ppf[f0] = ppf.get(f0, 0) + 1
     return ppf
-
-
-def derive_grid_shuffle_partitions(
-    feat: DataFrame, spark: SparkSession, grid: list[SweepConfig], warmup: int
-) -> int:
-    """Threshold-shuffle partition count for a whole sweep plan, sized from
-    estimated side-relation rows (:func:`estimate_pair_rows` /
-    :func:`partitions_from_pair_rows`) — the threshold shuffle dominates;
-    every downstream step is a broadcast join or an aggregate over its
-    output.  The estimate errs toward smaller, safer Arrow frames."""
-    return partitions_from_pair_rows(
-        estimate_pair_rows(feat, warmup, grid_pairs_per_formation(grid)), spark
-    )
 
 
 def estimate_pair_rows(
@@ -558,8 +506,9 @@ def sweep_candidates_with_thresholds(
     The threshold shuffle's exact partition count is always derived from
     estimated pair-grain rows (:func:`estimate_pair_rows` — one cheap
     aggregation over ``feat``; at candidate grain that estimate proxies
-    kernel *work* per partition), and the threshold relation is always
-    materialized once, inside that sizing scope."""
+    kernel *work* per partition) and written into the plan as an explicit
+    ``repartition(n, "_bkt")``; the session conf is only read, for the
+    floor.  The threshold relation is always materialized once."""
     same = [c.config_id for c in grid if c.feature1 == c.feature2]
     if same:
         raise ValueError(
@@ -617,23 +566,25 @@ def sweep_candidates_with_thresholds(
     n_parts = partitions_from_pair_rows(est_rows, spark)
     n_buckets = 4 * n_parts
 
-    def _materialized(thr_plan):
-        # the conf must be in effect BEFORE .persist(): persist eagerly
-        # compiles and registers the physical plan with the CacheManager,
-        # baking the exchange's partition count in — confs set afterward
-        # never reach the cached shuffle.  The count is also EXACT, not an
-        # AQE ceiling: cached plans compile with AQE disabled
-        # (canChangeCachedPlanOutputPartitioning defaults false), so the
-        # number set here is what materializes.  The scoped mutation
-        # assumes the driver plans one query at a time, which holds for
-        # every caller in this repo.  The count populates the cache NOW: a
-        # consumer plan with several branches (funnel ⋈ metrics) would
-        # otherwise schedule the Arrow pass concurrently per branch and
-        # race past the cold cache, paying the full threshold computation
-        # once per branch.
-        with exact_shuffle_partitions(spark, n_parts):
-            thr = hold(thr_plan)
-            thr.count()
+    def _materialized(side_rows, bucket_keys, compute, schema):
+        # the explicit repartition puts the exact count in the plan
+        # itself: the grouped pandas call reuses its hash partitioning on
+        # ``_bkt`` (no second exchange), and AQE never coalesces a
+        # repartition by number, so no session conf is written.
+        # The count populates the cache NOW: a consumer plan with several
+        # branches (funnel ⋈ metrics) would otherwise schedule the Arrow
+        # pass concurrently per branch and race past the cold cache,
+        # paying the full threshold computation once per branch.
+        thr = hold(
+            side_rows.withColumn(
+                "_bkt",
+                F.pmod(F.hash(*bucket_keys), F.lit(n_buckets)).cast("int"),
+            )
+            .repartition(n_parts, "_bkt")
+            .groupBy("_bkt")
+            .applyInPandas(compute, schema)
+        )
+        thr.count()
         return thr
 
     if candidate_grain:
@@ -762,14 +713,7 @@ def sweep_candidates_with_thresholds(
             pdf["thr_arr"] = pd.Series(la, dtype=pd.ArrowDtype(la.type))
             return pdf[out_cols]
 
-        thr = _materialized(
-            side_rows.withColumn(
-                "_bkt",
-                F.pmod(F.hash("formation", "symbol"), F.lit(n_buckets)).cast("int"),
-            )
-            .groupBy("_bkt")
-            .applyInPandas(compute, thr_schema)
-        )
+        thr = _materialized(side_rows, ("formation", "symbol"), compute, thr_schema)
         # JVM-side decode: broadcast the pair table (with each
         # orientation's q-list and its slot indices), fan out ×pairs per
         # formation, read the pair's values out of the feature columns
@@ -946,14 +890,7 @@ def sweep_candidates_with_thresholds(
                 pdf[f"thr_b_{i}"] = outs_b[i]
             return pdf[out_cols]
 
-        thr = _materialized(
-            side_rows.withColumn(
-                "_bkt",
-                F.pmod(F.hash("pair_id", "symbol"), F.lit(n_buckets)).cast("int"),
-            )
-            .groupBy("_bkt")
-            .applyInPandas(compute, thr_schema)
-        )
+        thr = _materialized(side_rows, ("pair_id", "symbol"), compute, thr_schema)
         # JVM-side decode: assemble each orientation's wide columns into
         # an array, slice off the pair's real q-count, zip with its
         # q-list (broadcast) and explode — the q1 × q2 fan-out the old

@@ -743,11 +743,7 @@ from ..operators.crossfeatures import (  # noqa: E402
     cross_feat_cte,
     with_cross_features,
 )
-from ..operators.sweep import (  # noqa: E402
-    derive_grid_shuffle_partitions,
-    exact_shuffle_partitions,
-    gen600_full_grid,
-)
+from ..operators.sweep import gen600_full_grid  # noqa: E402
 
 #: bar-level features the full-width grid pairs against the cross
 #: surface; the reference's full matrix uses all 9 (generate.sh:58-66).
@@ -874,24 +870,23 @@ GEN600_BAR9_FEATURES = (
 def q_sweep_gen600_complete_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bench demonstration: the reference's COMPLETE per-asset gen600
     matrix — 22 templates × 9 bar features × 38 cross features × 4
-    quantile combos = 30,096 configs — as one plan.  The whole plan
-    (the pair-grain threshold shuffle and the funnel aggregate over its
-    exploded output) is compiled under one derived exact partition count
-    and materialized inside that scope, so no stage holds
-    multi-million-row partitions at any SF.  The inner threshold pass
-    derives the same count (the scope's session value is its floor)."""
+    quantile combos = 30,096 configs — as one plan, the same shape as
+    ``sweep_gen600_fullgrid``.  The threshold pass carries its own
+    derived exact partition count in the plan and is materialized once;
+    every join from that cached relation to the funnel's partial
+    aggregate is a broadcast, so the funnel's map stage runs one task per
+    cached partition and its final exchange moves only partial
+    (config_id, symbol) rows."""
     bar9 = GEN600_BAR9_FEATURES
-    grid = gen600_full_grid(bar9)
-    featx = with_cross_features(_featg(spark, sf_dir))
-    features = sorted({*bar9, *CROSS_FEATURES})
-    n = derive_grid_shuffle_partitions(featx, spark, grid, WARMUP)
-    with exact_shuffle_partitions(spark, n):
-        candq = sweep_candidates_with_thresholds(
-            featx, spark, grid, features, WARMUP
+    return sweep_funnel(
+        sweep_candidates_with_thresholds(
+            with_cross_features(_featg(spark, sf_dir)),
+            spark,
+            gen600_full_grid(bar9),
+            sorted({*bar9, *CROSS_FEATURES}),
+            WARMUP,
         )
-        out = hold(sweep_funnel(candq))
-        out.count()  # materialize while the sizing conf is in effect
-    return out
+    )
 
 
 BENCH_QUERIES["sweep_gen600_complete_matrix"] = q_sweep_gen600_complete_matrix

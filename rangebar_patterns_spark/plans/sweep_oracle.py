@@ -87,15 +87,6 @@ GROUP BY config_id, symbol"""
     )
 
 
-def sweep_funnel_oracle(
-    grid: list[SweepConfig], warmup: int, feat_relation: str = "feat"
-) -> str:
-    ctes = ",\n".join(
-        _config_cand_cte(i, c, warmup, feat_relation) for i, c in enumerate(grid)
-    )
-    return f"{ctes}\nSELECT * FROM (\n{_funnel_unions(grid)}\n)"
-
-
 #: metrics columns the consolidated panel carries next to the funnel ones
 #: (barrier_oracle.BARRIER_METRICS_SELECT output minus the group keys)
 _PANEL_METRIC_COLS = (
@@ -114,9 +105,9 @@ def sweep_panel_oracle(
     """Consolidated sweep panel: the per-(config, symbol) funnel LEFT
     JOINed to the per-(config, symbol, barrier) trade metrics — one row
     per (config, symbol, barrier) with the funnel columns repeated, NULL
-    metric columns for configs whose signals produced no trades.  Same
-    faithful per-config template expansion as the separate funnel/metrics
-    twins (the candidate CTE chain is shared); matches the engine's
+    metric columns for configs whose signals produced no trades.  The
+    faithful per-config template expansion (one candidate CTE chain per
+    config, shared by the funnel and the trades); matches the engine's
     ``sweep_funnel(candq) LEFT JOIN barrier_metrics(trades)`` shape —
     the exact output shape of the full-width gen600 headline query."""
     mcols = ",\n    ".join(f"m.{c}" for c in _PANEL_METRIC_COLS)
@@ -162,18 +153,6 @@ sigs AS (
     FROM surv s JOIN fwdarr f USING (symbol, rn)
 ),
 {trades_chain_ctes(("config_id", "symbol"), side_expr="s.side")}"""
-
-
-def sweep_metrics_oracle(
-    grid: list[SweepConfig],
-    profiles: list[BarrierConfig],
-    warmup: int,
-    feat_relation: str = "feat",
-) -> str:
-    return (
-        sweep_trades_ctes(grid, profiles, warmup, feat_relation)
-        + barrier_metrics_select(("config_id", "symbol", "barrier_id"))
-    )
 
 
 def nfeature_metrics_oracle(

@@ -331,6 +331,26 @@ def test_every_persist_is_held_or_released_in_place():
     assert not bad, f"persists neither held nor released in place: {bad}"
 
 
+def test_no_package_code_sets_a_session_conf():
+    """No module in the package calls ``.conf.set(``: a session conf is
+    shared by every query planned on the session, so a count one plan
+    needs belongs in that plan (an explicit ``repartition``), not in a
+    scoped mutation that assumes one query at a time."""
+    import pathlib
+    import re
+
+    import rangebar_patterns_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    setters = [
+        f"{path.relative_to(root).as_posix()}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"\.conf\s*\.\s*set\(", line)
+    ]
+    assert not setters, f"session-conf mutations: {setters}"
+
+
 def test_reset_releases_only_the_packages_caches(spark):
     """``reset_plan_caches`` unpersists what the package held and nothing
     else: a frame the caller cached survives it, and is then the only

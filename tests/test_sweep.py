@@ -344,20 +344,38 @@ def test_gen600_complete_reference_matrix_runs(spark):
 
 
 def test_threshold_shuffle_ceiling_reaches_cached_plan(spark, monkeypatch):
-    """The derived threshold-shuffle count must be in effect when the
-    threshold relation's plan is compiled: ``persist()`` registers the
-    physical plan eagerly, so confs set after it never reach the cached
-    shuffle (a silent no-op that reintroduces the sf1 OOM the sizing
-    exists to prevent).  One row per partition with a ceiling of 7 forces
-    the derived count to 7; assert it appears on the pair-key exchange
-    inside the cached plan."""
+    """The derived threshold-shuffle count must reach the cached plan as
+    an explicit repartition, without touching the session conf: a count
+    that never reaches the cached shuffle silently reintroduces the sf1
+    OOM the sizing exists to prevent.  One row per partition with a
+    ceiling of 7 forces the derived count to 7; assert it appears on the
+    one ``_bkt`` exchange inside the cached plan, and that the grouped
+    pandas call adds no second exchange."""
     import re
 
     from rangebar_patterns_spark.operators import sweep as SW
     from rangebar_patterns_spark.plans import catalog as C
 
+    def nodes(p):
+        # the physical tree, descending into adaptive plans' final plans,
+        # query stages and cached relations
+        yield p
+        name = p.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            kids = [p.executedPlan()]
+        elif name.endswith("QueryStageExec"):
+            kids = [p.plan()]
+        elif name == "InMemoryTableScanExec":
+            kids = [p.relation().cachedPlan()]
+        else:
+            ch = p.children()
+            kids = [ch.apply(i) for i in range(ch.size())]
+        for k in kids:
+            yield from nodes(k)
+
     monkeypatch.setattr(SW, "THRESHOLD_ROWS_PER_PARTITION", 1)
     monkeypatch.setattr(SW, "THRESHOLD_MAX_PARTITIONS", 7)
+    conf_before = spark.conf.get("spark.sql.shuffle.partitions")
     candq = SW.sweep_candidates_with_thresholds(
         C._featg(spark, SF_DIR),
         spark,
@@ -365,11 +383,22 @@ def test_threshold_shuffle_ceiling_reaches_cached_plan(spark, monkeypatch):
         C.SWEEP_FEATURES,
         C.WARMUP,
     )
-    plan = candq._jdf.queryExecution().executedPlan().toString()
+    executed = candq._jdf.queryExecution().executedPlan()
+    plan = executed.toString()
     hits = set(re.findall(r"hashpartitioning\(_bkt[^)]*, (\d+)\)", plan))
     assert hits == {"7"}, f"ceiling did not reach the cached shuffle: {hits}"
-    # and the scoped conf mutation must have been restored
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    bkt_exchanges = [
+        head
+        for head in (
+            n.toString().splitlines()[0]
+            for n in nodes(executed)
+            if n.nodeName() == "Exchange"
+        )
+        if "(_bkt" in head
+    ]
+    assert len(bkt_exchanges) == 1, bkt_exchanges
+    # the count lives in the plan: the session conf is never written
+    assert spark.conf.get("spark.sql.shuffle.partitions") == conf_before
 
 
 def test_fused_path_rejects_same_feature_configs(spark):
@@ -451,9 +480,9 @@ def test_threshold_partitions_scale_with_fanout(spark):
     from rangebar_patterns_spark.operators.sweep import (
         THRESHOLD_MAX_PARTITIONS,
         default_sweep_grid,
-        derive_grid_shuffle_partitions,
         estimate_pair_rows,
         grid_formations,
+        grid_pairs_per_formation,
         partitions_from_pair_rows,
     )
     from rangebar_patterns_spark.plans.catalog import WARMUP, _featg
@@ -464,7 +493,9 @@ def test_threshold_partitions_scale_with_fanout(spark):
 
     # tiny fixture grid: the estimate lands under one partition's rows,
     # so the session default is the floor
-    n_small = derive_grid_shuffle_partitions(feat, spark, grid, WARMUP)
+    n_small = partitions_from_pair_rows(
+        estimate_pair_rows(feat, WARMUP, grid_pairs_per_formation(grid)), spark
+    )
     assert n_small == session_default
 
     formations = grid_formations(grid)
