@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -26,7 +27,7 @@ def _ensure_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
+    except AnalysisException:
         pass  # may be static in some builds; adapter handles both paths
 
 

@@ -55,3 +55,32 @@ def test_entry_module_exposes_the_same_window():
     q = e.queries()
     assert list(q) == list(QUERIES)
     assert set(e.oracle_sql()) == set(ORACLES)
+
+
+def test_ensure_confs_tolerates_only_a_static_conf_refusal():
+    """The nanos key may be refused as a static conf; that refusal is an
+    ``AnalysisException`` and is tolerated.  Any other error propagates."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    import __spark_entry__ as e
+
+    class _Conf(dict):
+        def __init__(self, err):
+            super().__init__()
+            self.err = err
+
+        def set(self, key, value):
+            if key == "spark.sql.legacy.parquet.nanosAsLong":
+                raise self.err
+            self[key] = value
+
+    class _Spark:
+        def __init__(self, err):
+            self.conf = _Conf(err)
+
+    refused = _Spark(AnalysisException(message="CANNOT_MODIFY_STATIC_CONFIG"))
+    e._ensure_confs(refused)
+    assert refused.conf["spark.sql.session.timeZone"] == "UTC"
+    with pytest.raises(RuntimeError):
+        e._ensure_confs(_Spark(RuntimeError("gateway down")))

@@ -6,7 +6,10 @@ entries that don't need them."""
 
 from __future__ import annotations
 
+import pytest
 from conftest import SF_DIR
+
+from rangebar_patterns_spark.plan_shape import signature
 
 #: entries whose plans legitimately contain Arrow pandas nodes
 ARROW_SANCTIONED = {
@@ -41,21 +44,33 @@ ARROW_SANCTIONED = {
 }
 
 
-def _plans(spark):
+@pytest.fixture(scope="module")
+def catalog_plans(spark):
+    """Every gate entry built once, unexecuted: ``{name: (signature, plan
+    text)}``.  The catalog checks below all read this one pass."""
     from rangebar_patterns_spark.plans.catalog import QUERIES
 
+    plans = {}
     for name, fn in QUERIES.items():
         df = fn(spark, SF_DIR)
-        yield name, df._jdf.queryExecution().executedPlan().toString()
+        text = df._jdf.queryExecution().executedPlan().toString()
+        plans[name] = (signature(df), text)
+    return plans
 
 
-def test_python_placement_across_catalog(spark):
+def _has(sig, token):
+    """Whether any operator of the whole tree, cached plans included,
+    has ``token`` in its class name."""
+    return any(token in name for name in sig.nodes)
+
+
+def test_python_placement_across_catalog(catalog_plans):
     arrow_nodes = ("FlatMapGroupsInPandas", "MapInPandas", "ArrowEvalPython")
     row_udfs, leaked = [], []
-    for n, p in _plans(spark):
-        if "BatchEvalPython" in p:
+    for n, (sig, _) in catalog_plans.items():
+        if _has(sig, "BatchEvalPython"):
             row_udfs.append(n)
-        if any(a in p for a in arrow_nodes) and n not in ARROW_SANCTIONED:
+        if any(_has(sig, a) for a in arrow_nodes) and n not in ARROW_SANCTIONED:
             leaked.append(n)
     assert not row_udfs, f"row-at-a-time Python UDFs in: {row_udfs}"
     assert not leaked, f"unexpected Python in: {leaked}"
@@ -84,32 +99,24 @@ def test_scan_column_pruning(spark):
     assert cols == {"doc_id", "n_chars"}, cols
 
 
-def test_join_strategies_across_catalog(spark):
+def test_join_strategies_across_catalog(catalog_plans):
     """No unbroadcast cartesian product may appear anywhere (every
     config-grid cross join must ship the grid side), and the explicitly
     hinted dimension joins plan as broadcast: the n-gram Jaccard verify
     (shingle-array side) and the barrier-grid cross join."""
-    cartesian = []
-    for n, p in _plans(spark):
-        if "CartesianProduct" in p:
-            cartesian.append(n)
+    cartesian = [
+        n for n, (sig, _) in catalog_plans.items()
+        if _has(sig, "CartesianProduct")
+    ]
     assert not cartesian, f"unbroadcast cross joins in: {cartesian}"
 
-    from rangebar_patterns_spark.plans.catalog import QUERIES
+    jac, _ = catalog_plans["dedup_neardup_pairs"]
+    assert _has(jac, "BroadcastHashJoin"), "jaccard verify should broadcast arrs"
 
-    jac = (
-        QUERIES["dedup_neardup_pairs"](spark, SF_DIR)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in jac, "jaccard verify should broadcast arrs"
-
-    trades = (
-        QUERIES["triple_barrier_trades"](spark, SF_DIR)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastNestedLoopJoin" in trades or "BroadcastExchange" in trades, (
-        "barrier grid cross join should broadcast the grid side"
-    )
+    trades, _ = catalog_plans["triple_barrier_trades"]
+    assert _has(trades, "BroadcastNestedLoopJoin") or _has(
+        trades, "BroadcastExchange"
+    ), "barrier grid cross join should broadcast the grid side"
 
 
 #: entries allowed to carry Window nodes with an EMPTY partition spec —
@@ -141,38 +148,15 @@ GLOBAL_WINDOW_SANCTIONED = {
 }
 
 
-def _walk_final_plan(node):
-    name = node.getClass().getSimpleName()
-    if name == "AdaptiveSparkPlanExec":
-        yield from _walk_final_plan(node.executedPlan())
-        return
-    if name.endswith("QueryStageExec"):
-        yield from _walk_final_plan(node.plan())
-        return
-    yield name, node
-    ch = node.children()
-    for i in range(ch.size()):
-        yield from _walk_final_plan(ch.apply(i))
-
-
-def test_global_windows_only_on_config_grain_entries(spark):
+def test_global_windows_only_on_config_grain_entries(catalog_plans):
     """Walk every catalog entry's physical plan (cached subtrees excluded
     — their shape is pinned where they're built) and flag any Window node
     with an empty PARTITION BY outside the sanctioned config-grain set."""
-    from rangebar_patterns_spark.plans.catalog import QUERIES
-
-    leaked = []
-    for name, fn in QUERIES.items():
-        df = fn(spark, SF_DIR)
-        n_global = sum(
-            1
-            for nn, node in _walk_final_plan(
-                df._jdf.queryExecution().executedPlan()
-            )
-            if nn == "WindowExec" and node.partitionSpec().size() == 0
-        )
-        if n_global > GLOBAL_WINDOW_SANCTIONED.get(name, 0):
-            leaked.append((name, n_global))
+    leaked = [
+        (name, sig.global_windows)
+        for name, (sig, _) in catalog_plans.items()
+        if sig.global_windows > GLOBAL_WINDOW_SANCTIONED.get(name, 0)
+    ]
     assert not leaked, (
         f"unpartitioned windows above the per-entry pins: {leaked} "
         f"(update GLOBAL_WINDOW_SANCTIONED only for config-grain relations)"
@@ -190,14 +174,10 @@ def test_fullgrid_funnel_plan_stays_broadcast_shaped(spark):
 
     df = QUERIES["sweep_gen600_fullgrid"](spark, SF_DIR)
     df.count()
-    names = [
-        n for n, _ in _walk_final_plan(df._jdf.queryExecution().executedPlan())
-    ]
-    assert names.count("SortMergeJoinExec") == 0
-    assert names.count("CartesianProductExec") == 0
-    assert names.count("ShuffleExchangeExec") <= 2, names.count(
-        "ShuffleExchangeExec"
-    )
+    names = signature(df).outside
+    assert names["SortMergeJoinExec"] == 0
+    assert names["CartesianProductExec"] == 0
+    assert names["ShuffleExchangeExec"] <= 2, names["ShuffleExchangeExec"]
 
 
 def test_gen800_plan_is_join_free_past_the_bar_lookup(spark):
@@ -211,10 +191,10 @@ def test_gen800_plan_is_join_free_past_the_bar_lookup(spark):
 
     df = QUERIES["gen800_rolling_rdd"](spark, SF_DIR)
     df.count()  # resolve AQE so the final plan is the one that ran
+    names = signature(df).outside
     n_joins = sum(
-        1
-        for n, _ in _walk_final_plan(df._jdf.queryExecution().executedPlan())
-        if n in (
+        names[n]
+        for n in (
             "BroadcastHashJoinExec",
             "SortMergeJoinExec",
             "ShuffledHashJoinExec",
@@ -382,7 +362,7 @@ def test_reset_releases_only_the_packages_caches(spark):
         user.unpersist()
 
 
-def test_sweep_entries_run_the_one_fused_threshold_path(spark):
+def test_sweep_entries_run_the_one_fused_threshold_path(catalog_plans):
     """The catalog's sweep entries all take the fused threshold path: each
     executed plan carries the fused kernel's ``pair_id`` key and never the
     layered reference's ``partner`` key, and no plans module names the
@@ -390,11 +370,9 @@ def test_sweep_entries_run_the_one_fused_threshold_path(spark):
     import pathlib
 
     import rangebar_patterns_spark.plans as plans_pkg
-    from rangebar_patterns_spark.plans.catalog import QUERIES
 
     for name in ("sweep_panel", "sweep_gen500_1008cfg", "sweep_gen600_fullgrid"):
-        plan = QUERIES[name](spark, SF_DIR)._jdf.queryExecution().executedPlan()
-        text = plan.toString()
+        _, text = catalog_plans[name]
         assert "pair_id" in text, name
         assert "partner" not in text, name
     root = pathlib.Path(plans_pkg.__file__).parent

@@ -354,24 +354,8 @@ def test_threshold_shuffle_ceiling_reaches_cached_plan(spark, monkeypatch):
     import re
 
     from rangebar_patterns_spark.operators import sweep as SW
+    from rangebar_patterns_spark.plan_shape import walk
     from rangebar_patterns_spark.plans import catalog as C
-
-    def nodes(p):
-        # the physical tree, descending into adaptive plans' final plans,
-        # query stages and cached relations
-        yield p
-        name = p.getClass().getSimpleName()
-        if name == "AdaptiveSparkPlanExec":
-            kids = [p.executedPlan()]
-        elif name.endswith("QueryStageExec"):
-            kids = [p.plan()]
-        elif name == "InMemoryTableScanExec":
-            kids = [p.relation().cachedPlan()]
-        else:
-            ch = p.children()
-            kids = [ch.apply(i) for i in range(ch.size())]
-        for k in kids:
-            yield from nodes(k)
 
     monkeypatch.setattr(SW, "THRESHOLD_ROWS_PER_PARTITION", 1)
     monkeypatch.setattr(SW, "THRESHOLD_MAX_PARTITIONS", 7)
@@ -391,12 +375,16 @@ def test_threshold_shuffle_ceiling_reaches_cached_plan(spark, monkeypatch):
         head
         for head in (
             n.toString().splitlines()[0]
-            for n in nodes(executed)
+            for _, n, _ in walk(executed)
             if n.nodeName() == "Exchange"
         )
         if "(_bkt" in head
     ]
-    assert len(bkt_exchanges) == 1, bkt_exchanges
+    # the cached plan has run, so the walk visits its final and its
+    # initial tree: the one exchange appears once in each, under its own
+    # plan id
+    assert len(bkt_exchanges) == 2, bkt_exchanges
+    assert len({re.sub(r"\[plan_id=\d+\]", "", h) for h in bkt_exchanges}) == 1
     # the count lives in the plan: the session conf is never written
     assert spark.conf.get("spark.sql.shuffle.partitions") == conf_before
 

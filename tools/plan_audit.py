@@ -1,24 +1,25 @@
 #!/usr/bin/env python
-"""Physical-plan audit across the whole correctness catalog.
+"""Physical-plan audit and stage attribution for catalog entries.
 
-For every `__spark_entry__.queries()` entry this executes the query at
-``$SPARK_GRAFT_SF_DIR`` (default sf0.01) and records BOTH the static plan
-shape (exchange count, join strategies, Arrow/Python nodes, unpartitioned
-windows, widest parquet ReadSchema) and the runtime shuffle totals
-(bytes written + spill, summed over every STAGE the query triggered,
-read from the UI status API — stage-level accounting, unlike the SQL
-status store's per-execution metrics, also captures shuffles that run
-inside a persisted relation's materialization, whose accumulators never
-attach to any SQL execution).  Output is a Markdown
-table written to ``PLAN_AUDIT.md`` — regenerated per round so the
-scale-design claims stay tied to the actual plans, not to prose.
+Both modes run at ``$SPARK_GRAFT_SF_DIR`` (default sf0.01) and read plans
+and runtime totals through ``rangebar_patterns_spark.plan_shape``.
 
-Red flags are collected in a final section; an exit code of 1 means the
-audit found a plan-hygiene violation (CartesianProduct or row-at-a-time
-BatchEvalPython anywhere, including in entries where Arrow batching is
-sanctioned).
+``python tools/plan_audit.py``
+    Executes every ``__spark_entry__.queries()`` entry and every bench
+    demo grid, and writes ``PLAN_AUDIT.md``: the static plan shape
+    (exchange count, join strategies, Arrow nodes, unpartitioned windows,
+    widest parquet ReadSchema) and the shuffle bytes written and spilled
+    over every STAGE the query triggered, persisted relations'
+    materialization included.  Exit code 1 means a red flag:
+    CartesianProduct or row-at-a-time BatchEvalPython anywhere in a plan,
+    cached plans included.
 
-Usage: python tools/plan_audit.py [output.md]
+``python tools/plan_audit.py <entry>[,<entry>...]``
+    Runs each named entry (gate, restored or demo) once with cold plan
+    caches and prints its wall time, rows, jobs, stages, tasks, executor
+    run and CPU time, its longest stages, its jobs by call site and its
+    plan signature.  Writes no file; each run is one pass, so repeat the
+    command for more.
 """
 
 from __future__ import annotations
@@ -26,144 +27,111 @@ from __future__ import annotations
 import os
 import sys
 import time
+from collections import Counter
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if _REPO not in sys.path:
-    sys.path.insert(0, _REPO)
+sys.path.insert(0, _REPO)
+
+from rangebar_patterns_spark.plan_shape import (  # noqa: E402
+    signature,
+    stage_totals,
+    status,
+)
+
+ARROW_NODES = (
+    "FlatMapGroupsInPandasExec",
+    "MapInPandasExec",
+    "ArrowEvalPythonExec",
+    "FlatMapGroupsInPandasWithStateExec",
+)
+STAGES = "stages?status=complete"
+
 
 def fmt_size(n: float) -> str:
     for unit in ("B", "KiB", "MiB", "GiB"):
         if n < 1024 or unit == "GiB":
             return f"{n:.1f} {unit}" if unit != "B" else f"{int(n)} B"
         n /= 1024
-    return f"{n:.1f} GiB"
 
 
-def _stages(spark) -> list[dict]:
-    """Completed stages of THIS application, from its own UI status API.
-
-    The REST base comes from ``sc.uiWebUrl`` and the application id from
-    ``sc.applicationId`` — never a hard-coded localhost:4040/apps[0],
-    which on a co-tenant host can be a different Spark app's UI and would
-    silently attribute another workload's shuffle totals to this audit."""
-    import json
-    import urllib.request
-
-    sc = spark.sparkContext
-    ui = sc.uiWebUrl
-    if not ui:
-        raise RuntimeError("spark.ui.enabled is off — no status API")
-    base = f"{ui}/api/v1/applications"
-    return json.load(
-        urllib.request.urlopen(
-            f"{base}/{sc.applicationId}/stages?status=complete"
-        )
-    )
-
-
-def stage_totals(spark, start_id: int) -> tuple[float, float, int, bool]:
-    """Sum shuffle-write + spill bytes over completed stages with id >
-    start_id.  Stage-level accounting (vs the SQL store's per-execution
-    metrics) also captures work done materializing persisted relations.
-    The final element is False when the status API could not be read —
-    callers must surface that instead of reporting 0 B."""
-    shuffle = spill = 0.0
-    last = start_id
-    try:
-        stages = _stages(spark)
-    except Exception as exc:
-        print(f"audit: status API fetch failed: {exc}", file=sys.stderr)
-        return 0.0, 0.0, start_id, False
-    for s in stages:
-        sid = s["stageId"]
-        last = max(last, sid)
-        if sid <= start_id:
-            continue
-        shuffle += s.get("shuffleWriteBytes", 0)
-        spill += s.get("memoryBytesSpilled", 0) + s.get("diskBytesSpilled", 0)
-    return shuffle, spill, last, True
-
-
-ARROW_NODES = {
-    "FlatMapGroupsInPandasExec",
-    "MapInPandasExec",
-    "ArrowEvalPythonExec",
-    "FlatMapGroupsInPandasWithStateExec",
-}
-
-
-def walk_plan(node):
-    """Yield every operator of the FINAL physical plan exactly once:
-    descends into AQE-resolved plans and materialized query stages, stops
-    at InMemoryTableScan (the cached subtree already ran — its cost is
-    charged, by the status store, to the entry that materialized it)."""
-    name = node.getClass().getSimpleName()
-    if name == "AdaptiveSparkPlanExec":
-        yield from walk_plan(node.executedPlan())
-        return
-    if name.endswith("QueryStageExec"):
-        yield from walk_plan(node.plan())
-        return
-    yield name, node
-    ch = node.children()
-    for i in range(ch.size()):
-        yield from walk_plan(ch.apply(i))
-
-
-def audit_plan(root) -> dict:
-    counts: dict[str, int] = {}
-    global_windows = 0
-    widest, widest_cols = 0, ""
-    for name, node in walk_plan(root):
-        counts[name] = counts.get(name, 0) + 1
-        if name == "WindowExec" and node.partitionSpec().size() == 0:
-            global_windows += 1
-        if name == "FileSourceScanExec":
-            try:
-                sch = node.requiredSchema()
-                cols = [
-                    sch.apply(i).name() for i in range(sch.size())
-                ]
-            except Exception:
-                cols = []
-            if len(cols) > widest:
-                widest, widest_cols = len(cols), ",".join(cols[:6])
-
-    def c(*names):
-        return sum(counts.get(n, 0) for n in names)
-
+def shape(sig) -> dict[str, int]:
+    """The audit's per-entry plan counts, outside cached plans."""
+    o = sig.outside
     return {
-        "exchanges": c("ShuffleExchangeExec"),
-        "reused": c("ReusedExchangeExec"),
-        "bcast_joins": c("BroadcastHashJoinExec", "BroadcastNestedLoopJoinExec"),
-        "smj": c("SortMergeJoinExec"),
-        "arrow": c(*ARROW_NODES),
-        "global_windows": global_windows,
-        "cartesian": c("CartesianProductExec") > 0,
-        "row_python": c("BatchEvalPythonExec") > 0,
-        "scan_width": (widest, widest_cols),
+        "exchanges": o["ShuffleExchangeExec"],
+        "reused": o["ReusedExchangeExec"],
+        "bcast_joins": o["BroadcastHashJoinExec"]
+        + o["BroadcastNestedLoopJoinExec"],
+        "smj": o["SortMergeJoinExec"],
+        "arrow": sum(o[n] for n in ARROW_NODES),
+        "global_windows": sig.global_windows,
     }
 
 
-def main() -> int:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "PLAN_AUDIT.md",
-    )
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+def fmt_counts(counts: dict[str, int]) -> str:
+    return " ".join(f"{k}={v}" for k, v in counts.items())
 
-    from rangebar_patterns_spark.session import get_spark
 
-    spark = get_spark("plan-audit", extra_conf={"spark.ui.enabled": "true"})
+def settle(spark) -> None:
+    """Drain the listener bus: the status store is fed from it
+    asynchronously, and just-finished stages must be visible."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
 
+
+def attribute(spark, names: list[str], sf_dir: str) -> None:
+    from rangebar_patterns_spark.plans import catalog as C
+
+    qs = {**C.QUERIES, **C.RESTORED_QUERIES, **C.BENCH_QUERIES}
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(f"unknown entries: {unknown}")
+    # JIT warm-up, so the first entry's wall is not the JVM's start
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    for name in names:
+        C.reset_plan_caches(spark)
+        settle(spark)
+        s0 = max([-1] + [s["stageId"] for s in status(spark, STAGES)])
+        j0 = max([-1] + [j["jobId"] for j in status(spark, "jobs")])
+        t0 = time.perf_counter()
+        df = qs[name](spark, sf_dir)
+        n = df.count()
+        wall = time.perf_counter() - t0
+        settle(spark)
+        stages = [s for s in status(spark, STAGES) if s["stageId"] > s0]
+        jobs = [j for j in status(spark, "jobs") if j["jobId"] > j0]
+        run_s = sum(s["executorRunTime"] for s in stages) / 1000
+        cpu_s = sum(s["executorCpuTime"] for s in stages) / 1e9
+        tasks = sum(s["numTasks"] for s in stages)
+        print(
+            f"\n=== {name}: wall {wall:.2f}s, {n} rows, "
+            f"{len(jobs)} jobs, {len(stages)} stages, {tasks} tasks, "
+            f"task-run {run_s:.2f}s (cpu {cpu_s:.2f}s), "
+            f"run/wall {run_s / wall:.2f} ==="
+        )
+        for s in sorted(stages, key=lambda s: -s["executorRunTime"])[:12]:
+            print(
+                f"  stage {s['stageId']:>4} tasks={s['numTasks']:>5} "
+                f"run={s['executorRunTime'] / 1000:7.2f}s "
+                f"cpu={s['executorCpuTime'] / 1e9:7.2f}s "
+                f"in={s.get('inputBytes', 0) >> 20}MB "
+                f"sh_r={s.get('shuffleReadBytes', 0) >> 20}MB  "
+                f"{s['name'].splitlines()[0][:70]}"
+            )
+        for site, k in sorted(Counter(j["name"] for j in jobs).items()):
+            print(f"  jobs {k:>3}  {site}")
+        sig = signature(df)
+        print(f"  shape: {fmt_counts(shape(sig))} widest_scan={sig.widest_scan[0]}")
+        print(f"  nodes: {fmt_counts(dict(sorted(sig.nodes.items())))}")
+
+
+def audit(spark, sf_dir: str) -> int:
     import __spark_entry__ as entrymod
 
-    qs = dict(entrymod.queries())
     # the bench demo grids (full-width gen600 panels) get the same audit:
     # the headline plans should carry the same evidence as the gate
     from rangebar_patterns_spark.plans.catalog import BENCH_QUERIES
 
-    qs.update(BENCH_QUERIES)
+    qs = {**entrymod.queries(), **BENCH_QUERIES}
     rows, flags = [], []
     mark = -1
     for name, fn in qs.items():
@@ -171,27 +139,20 @@ def main() -> int:
         df = fn(spark, sf_dir)
         df.count()
         dt = time.perf_counter() - t0
-        a = audit_plan(df._jdf.queryExecution().executedPlan())
-        # the status store is fed asynchronously off the listener bus;
-        # drain it so just-finished stages' totals are visible
-        try:
-            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-        except Exception:
-            time.sleep(0.5)  # older/newer API shape — settle heuristically
+        sig = signature(df)
+        a = shape(sig)
+        settle(spark)
         shuffle, spill, mark, st_ok = stage_totals(spark, mark)
-        rows.append((name, a, shuffle, spill, st_ok, dt))
+        rows.append((name, a, sig.widest_scan, shuffle, spill, st_ok, dt))
         if not st_ok:
             flags.append(f"{name}: status API unreadable — shuffle/spill unknown")
-        if a["cartesian"]:
+        if sig.nodes["CartesianProductExec"]:
             flags.append(f"{name}: unbroadcast CartesianProduct")
-        if a["row_python"]:
+        if sig.nodes["BatchEvalPythonExec"]:
             flags.append(f"{name}: row-at-a-time BatchEvalPython")
         print(
-            f"audit: {name}: exch={a['exchanges']}+{a['reused']}r "
-            f"bcast={a['bcast_joins']} smj={a['smj']} arrow={a['arrow']} "
-            f"gwin={a['global_windows']} "
-            f"shuffle={fmt_size(shuffle)} spill={fmt_size(spill)} "
-            f"({dt:.1f}s)",
+            f"audit: {name}: {fmt_counts(a)} shuffle={fmt_size(shuffle)} "
+            f"spill={fmt_size(spill)} ({dt:.1f}s)",
             file=sys.stderr,
         )
 
@@ -202,21 +163,20 @@ def main() -> int:
         "over every STAGE the entry triggered, from the UI status API —",
         "including stages materializing persisted relations (charged to",
         "their first consumer, same attribution as bench.py).  Static",
-        "columns come from",
-        "walking the final post-AQE operator tree — cached",
+        "columns come from walking the final post-AQE operator tree — cached",
         "(InMemoryTableScan) subtrees are NOT re-counted in their consumers.",
         "'global windows' are Window nodes with an empty PARTITION BY:",
         "legitimate only on config-grain relations (~symbols × grid rows),",
         "never on bar/event grain — the per-entry count is listed so that",
-        "invariant stays auditable.",
+        "invariant stays auditable.  The red flags below read the whole",
+        "tree, cached plans included.",
         "",
         "| query | shuffles (+reused) | bcast joins | sort-merge joins |"
         " arrow nodes | global windows | widest scan |"
         " shuffle written | spill | wall |",
         "|---|---|---|---|---|---|---|---|---|---|",
     ]
-    for name, a, shuffle, spill, st_ok, dt in rows:
-        w, cols = a["scan_width"]
+    for name, a, (w, cols), shuffle, spill, st_ok, dt in rows:
         scan = f"{w} ({cols}{'…' if w > 6 else ''})" if w else "— (cached)"
         sh_cell = fmt_size(shuffle) if st_ok else "n/a"
         sp_cell = fmt_size(spill) if st_ok else "n/a"
@@ -239,18 +199,31 @@ def main() -> int:
             "None: no CartesianProduct, no row-at-a-time Python anywhere in"
             " the gate catalog or the bench demo grids."
         )
-    tot_sh = sum(r[2] for r in rows)
-    tot_sp = sum(r[3] for r in rows)
+    tot_sh = sum(r[3] for r in rows)
+    tot_sp = sum(r[4] for r in rows)
     lines += [
         "",
         f"Catalog totals: shuffle written {fmt_size(tot_sh)}, spill"
         f" {fmt_size(tot_sp)}.",
         "",
     ]
+    out_path = os.path.join(_REPO, "PLAN_AUDIT.md")
     with open(out_path, "w") as fh:
         fh.write("\n".join(lines))
     print(f"wrote {out_path}", file=sys.stderr)
     return 1 if flags else 0
+
+
+def main() -> int:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+
+    from rangebar_patterns_spark.session import get_spark
+
+    spark = get_spark("plan-audit", extra_conf={"spark.ui.enabled": "true"})
+    if len(sys.argv) > 1:
+        attribute(spark, sys.argv[1].split(","), sf_dir)
+        return 0
+    return audit(spark, sf_dir)
 
 
 if __name__ == "__main__":
